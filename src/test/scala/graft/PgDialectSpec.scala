@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.jdbc.JdbcDialects
-import graft.sources.SchemaMapper
+import graft.sources.{JdbcSink, SchemaMapper}
 
 /** Offline pin of the PostgreSQL dialect path — the reference's actual
   * target (`/root/reference/src/main.rs:60-64` connect string,
@@ -92,5 +92,54 @@ class PgDialectSpec extends AnyFunSuite {
     assert(opt === "id BIGINT, price DECIMAL(12,2), tag STRING, ts TIMESTAMP")
     // Spark parses the whole option as a struct DDL on a real write
     assert(StructType.fromDDL(opt).length === 4)
+  }
+
+  /** The statements `body` sends through a JDBC connection that only
+    * records them. */
+  private def recorded(body: java.sql.Connection => Unit): Seq[String] = {
+    import java.lang.reflect.{InvocationHandler, Proxy}
+    val sqls = Seq.newBuilder[String]
+    def fake[T](cls: Class[T])(answer: PartialFunction[(String, Array[AnyRef]), AnyRef]): T =
+      Proxy.newProxyInstance(getClass.getClassLoader, Array(cls), new InvocationHandler {
+        def invoke(p: AnyRef, m: java.lang.reflect.Method, args: Array[AnyRef]): AnyRef =
+          answer.applyOrElse((m.getName, args), (_: (String, Array[AnyRef])) => null)
+      }).asInstanceOf[T]
+    val statement = fake(classOf[java.sql.Statement]) {
+      case ("executeUpdate", args) => sqls += args(0).toString; Int.box(0)
+    }
+    body(fake(classOf[java.sql.Connection]) { case ("createStatement", _) => statement })
+    sqls.result()
+  }
+
+  test("JdbcSink's stage DDL and publish statement under PostgresDialect") {
+    val schema = StructType(Seq(
+      StructField("l_orderkey", LongType, nullable = false),
+      StructField("l_extendedprice", DecimalType(12, 2)),
+      StructField("l_shipdate", DateType),
+      StructField("l_comment", StringType)))
+    val props = new java.util.Properties()
+    // JDBCOptions loads the named driver class when it is built and no
+    // PG driver ships here; the dialect is chosen by the URL alone.
+    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    val target = "public.lineitem"
+    val w = JdbcSink.StagedWrite(
+      JdbcSink.options("jdbc:postgresql://localhost/graft", target, props, schema, 1000),
+      schema, caseSensitive = false, token = "0123456789ab")
+    val stage = JdbcSink.stageName(target, w.token, 3, 1)
+    assert(stage === "public.graft_stg_0123456789ab_3_1")
+    val stageDdl = recorded(w.createTable(_, stage))
+    assert(stageDdl === Seq("CREATE TABLE public.graft_stg_0123456789ab_3_1 (" +
+      "\"l_orderkey\" BIGINT NOT NULL, \"l_extendedprice\" NUMERIC(12,2) , " +
+      "\"l_shipdate\" DATE , \"l_comment\" TEXT ) "))
+    // the stage carries exactly the target's column types
+    assert(recorded(w.createTable(_, target)) === stageDdl.map(_.replace(stage, target)))
+    val cols = "\"l_orderkey\", \"l_extendedprice\", \"l_shipdate\", \"l_comment\""
+    assert(w.publishSql(stage, None) ===
+      s"INSERT INTO public.lineitem ($cols) SELECT $cols FROM $stage")
+    // appending to an existing table keeps that table's spelling of
+    // each column, as Spark's own JDBC writer does
+    val existing = StructType(schema.map(f => f.copy(name = f.name.toUpperCase)))
+    assert(w.publishSql(stage, Some(existing)) ===
+      s"INSERT INTO public.lineitem (${cols.toUpperCase}) SELECT $cols FROM $stage")
   }
 }

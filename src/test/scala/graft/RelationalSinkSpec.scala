@@ -1,17 +1,46 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Row, SaveMode}
 import org.apache.spark.sql.types._
 import graft.TestSpark
 
-/** Offline-max coverage for the live-JDBC reference ops #4/#6/#8
-  * (`/root/reference/src/main.rs:60-72,146-149`): no Postgres driver
-  * jar ships in this image, so instead of executing against a DB these
-  * pin the EXACT contract `JdbcSink` hands to Spark's JDBC writer —
-  * the batch size, the connection-fanout bound, and the DDL type
-  * string. If any of those drift, the live path would too.
+/** The JDBC sink's contract, offline and live. Offline: the writer
+  * options (batch size, DDL types), the connection-fanout bound and the
+  * stage names. Live, against embedded Derby and a DuckDB file (no
+  * Postgres driver jar ships in this image): the staged write end to
+  * end — reference ops #4/#6/#8 (reference `src/main.rs:60-72,146-149`)
+  * — and its failure paths: a failed write leaves the target as it
+  * was, a retried task attempt is published once, and no write leaves
+  * a stage table behind.
   */
 class RelationalSinkSpec extends AnyFunSuite {
+
+  private def derbyProps = {
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    props
+  }
+
+  private def query[T](url: String)(f: java.sql.Connection => T): T = {
+    val c = java.sql.DriverManager.getConnection(url)
+    try f(c) finally c.close()
+  }
+
+  /** Tables in any schema whose name starts with the stage prefix. */
+  private def stageTables(url: String): List[String] = query(url) { c =>
+    val rs = c.getMetaData.getTables(null, null, "%", null)
+    try Iterator.continually(rs).takeWhile(_.next()).map(_.getString("TABLE_NAME"))
+      .filter(_.toLowerCase(java.util.Locale.ROOT).startsWith(JdbcSink.StagePrefix)).toList
+    finally rs.close()
+  }
+
+  /** (count, sum) of the `v` column of a Derby table. */
+  private def countAndSum(url: String, table: String): (Long, Double) = query(url) { c =>
+    val rs = c.createStatement().executeQuery(s"""SELECT COUNT(*), SUM("v") FROM $table""")
+    rs.next()
+    (rs.getLong(1), rs.getDouble(2))
+  }
 
   test("writerOptions carries the reference's batchsize=1000 and the SchemaMapper DDL") {
     val schema = StructType(Seq(
@@ -65,6 +94,7 @@ class RelationalSinkSpec extends AnyFunSuite {
     // per partition, exercising the reference's batching shape live
     new JdbcSink(url, props, batchSize = 300, numPartitions = 3)
       .write(df, "orders_live", org.apache.spark.sql.SaveMode.Overwrite)
+    assert(stageTables(url).isEmpty)
     val back = spark.read.jdbc(url, "orders_live", props)
     val (nIn, sumIn) = df.agg(count(lit(1)), sum(col("o_totalprice")))
       .as[(Long, Double)](spark.implicits.newProductEncoder).head()
@@ -112,6 +142,7 @@ class RelationalSinkSpec extends AnyFunSuite {
     // Derby leg above; THIS leg adds dialect + driver diversity.
     new JdbcSink(url, props, batchSize = 300, numPartitions = 1)
       .write(df, "orders_live", org.apache.spark.sql.SaveMode.Overwrite)
+    assert(stageTables(url).isEmpty)
     val back = spark.read.jdbc(url, "orders_live", props)
     val (nIn, sumIn) = df.agg(count(lit(1)), sum(col("o_totalprice")))
       .as[(Long, Double)](spark.implicits.newProductEncoder).head()
@@ -121,5 +152,80 @@ class RelationalSinkSpec extends AnyFunSuite {
     assert(math.abs(sumOut - sumIn) < 1e-6)
     assert(back.select("o_orderkey").except(df.select("o_orderkey")).count() === 0)
     assert(df.select("o_orderkey").except(back.select("o_orderkey")).count() === 0)
+  }
+
+  test("stage names stay within 63 characters and differ per partition and attempt") {
+    // PostgreSQL silently truncates longer identifiers, so two stages
+    // named after a long target could collide
+    val target = "t" * 60
+    val token = JdbcSink.newToken()
+    val names = for (p <- Seq(0, 1, Int.MaxValue); a <- Seq(0, 1, Int.MaxValue))
+      yield JdbcSink.stageName(target, token, p, a)
+    assert(names.forall(_.length <= 63), names)
+    assert(names.distinct.size === names.size)
+    // a schema-qualified target keeps its stages in the same schema
+    assert(JdbcSink.stageName(s"sales.$target", token, 1, 0) ===
+      "sales." + JdbcSink.stageName(target, token, 1, 0))
+  }
+
+  test("a write that fails partway leaves the target as it was and no stage behind") {
+    import org.apache.spark.sql.functions._
+    val spark = TestSpark.spark
+    val url = "jdbc:derby:memory:graftfail;create=true"
+    val sink = new JdbcSink(url, derbyProps, batchSize = 100, numPartitions = 3)
+    val seed = spark.range(0, 500, 1, 2).select(col("id"), (col("id") * 1.5).as("v"))
+    sink.write(seed, "fail_target", SaveMode.Overwrite)
+    val seeded = countAndSum(url, "fail_target")
+    assert(seeded === ((500L, 1.5 * 499 * 500 / 2)))
+    // Partition 2 of 3 holds ids 2000..2999 and throws at its 501st
+    // row, after five of its batches ran. Partition 0 takes a second
+    // to produce its first row, so it creates its stage after the job
+    // has already failed; the write must still leave no stage behind.
+    val slow = udf((id: Long) => { if (id == 0) Thread.sleep(1000); id * 1.5 })
+    val bad = spark.range(0, 3000, 1, 3).select(col("id"),
+      when(col("id") === 2500, raise_error(lit("injected write failure")))
+        .otherwise(slow(col("id"))).as("v"))
+    val tracker = spark.sparkContext.statusTracker
+    Seq(SaveMode.Append, SaveMode.Overwrite).foreach { mode =>
+      val e = intercept[Exception](sink.write(bad, "fail_target", mode))
+      assert(e.getMessage.contains("injected write failure"), mode)
+      // the failed job's other tasks have ended before the catalog is read
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (tracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      assert(countAndSum(url, "fail_target") === seeded, mode)
+      assert(stageTables(url).isEmpty, mode)
+    }
+  }
+
+  test("a retried task attempt is published once: only returned stages are copied") {
+    // In local mode a task is not retried, so this drives the per-task
+    // stage writer directly, as the retries of one partition would,
+    // each call in a one-task job of its own.
+    def inTask(stage: () => Option[String]): Option[String] =
+      TestSpark.spark.sparkContext.parallelize(Seq(0), 1).map(_ => stage()).collect().head
+    val url = "jdbc:derby:memory:graftretry;create=true"
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("v", DoubleType, nullable = false)))
+    val w = JdbcSink.StagedWrite(
+      JdbcSink.options(url, "retry_target", derbyProps, schema, batchSize = 100),
+      schema, caseSensitive = false)
+    val (p0, p1) = (0 until 1000).map(i => Row(i.toLong, i * 1.5)).splitAt(500)
+    // attempt 0 of partition 0 dies after 250 rows, two batches executed
+    val e = intercept[Exception](inTask(() => w.writeStage(0, 0, p0.iterator.zipWithIndex.map {
+      case (r, i) => if (i == 250) throw new RuntimeException("injected") else r
+    })))
+    assert(e.getMessage.contains("injected"))
+    // attempt 1 commits its stage, but its result never reaches the
+    // driver (its executor is lost), so attempt 2 writes the partition again
+    assert(inTask(() => w.writeStage(0, 1, p0.iterator)).isDefined)
+    val returned = Seq(inTask(() => w.writeStage(0, 2, p0.iterator)),
+      inTask(() => w.writeStage(1, 0, p1.iterator))).flatten
+    assert(stageTables(url).size === 4)
+    w.publish(returned, overwrite = false)
+    w.dropStages()
+    assert(countAndSum(url, "retry_target") === ((1000L, 1.5 * 999 * 1000 / 2)))
+    assert(stageTables(url).isEmpty)
   }
 }

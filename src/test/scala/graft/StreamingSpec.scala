@@ -306,9 +306,12 @@ class StreamingSpec extends AnyFunSuite {
     // The reference end to end, streaming-ized AND against a real DB:
     // unbounded source → micro-batches → the same JdbcSink (real DDL,
     // real batched INSERTs) into embedded Derby, then read-back
-    // through spark.read.jdbc. Exactly-once here comes from append
-    // batches + checkpointless processAllAvailable in one run; in
-    // production the checkpoint + idempotent batch ids carry it.
+    // through spark.read.jdbc. Each micro-batch is published in one
+    // transaction, so a failed batch leaves no rows. That alone is not
+    // exactly-once: a batch replayed after a crash between its publish
+    // and the checkpoint commit would be appended twice. Here one run
+    // with processAllAvailable replays nothing; in production the
+    // checkpoint plus idempotent batch ids carry it.
     import org.apache.spark.sql.functions._
     val url = "jdbc:derby:memory:graftstream;create=true"
     val props = new java.util.Properties()
