@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark harness: runs every registered query against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line of per-query seconds.
   *
@@ -32,6 +30,10 @@ import org.apache.spark.sql.SparkSession
   * cluster each spark-submit is its own driver JVM and executors are
   * recycled per app — nobody runs 65 unrelated query families through
   * one driver's code cache back to back.
+  *
+  * For dev timing of a few queries, `runMain graft.Bench <names...>`
+  * runs them in this JVM and logs every draw to stderr;
+  * `SPARK_GRAFT_REPEAT` sets the number of draws.
   */
 object Bench {
 
@@ -207,19 +209,9 @@ object Bench {
       val line =
         if (isolate == "off" || args.nonEmpty) runSuite(args.toIndexedSeq, warmup = true)
         else runIsolated()
-      // The driver's artifact capture keeps only the LAST ~2000 chars
-      // of stdout — the full-name 111-query line is ~3.5k and loses
-      // its front half (BENCH_r05 lost total_sec and families a..q12).
-      // So: full-precision line goes to a FILE, and stdout ends with a
-      // compact twin (unique short ids — the family prefix+number every
-      // query name starts with — and centisecond precision) that fits
-      // a 2000-char tail whole.
-      // Default artifact path is cwd-relative (not a hardcoded repo
-      // location), and dev SUBSET runs (args given) get a distinct
-      // default so a partial run never clobbers the last full-suite
-      // artifact the driver and BASELINE.md refer to.
-      // a SPARK_GRAFT_ONLY-restricted run is a subset too, even with
-      // empty args — it must never clobber the driver's full artifacts
+      // Default artifact path is cwd-relative, and dev SUBSET runs (args
+      // given, or a SPARK_GRAFT_ONLY restriction) get a distinct default
+      // so a partial run never clobbers the last full-suite artifact.
       val fullRun = args.isEmpty && sys.env.get("SPARK_GRAFT_ONLY").isEmpty
       val defaultOut =
         if (fullRun) "BENCH_FULL.json" else "BENCH_SUBSET.json"
@@ -228,156 +220,8 @@ object Bench {
         (line + "\n").getBytes("UTF-8"))
       catch { case e: Exception =>
         System.err.println(s"[bench] could not write $outFile: $e") }
-      // absolute pointer: consumers resolve "full" from arbitrary cwds
-      val fullPath = java.nio.file.Paths.get(outFile).toAbsolutePath.toString
-      val compactLine = compact(line, fullPath)
-      // The compact line ALSO goes to a fixed file: under sbt every
-      // stdout line carries an "[info] " prefix, so a driver that
-      // captures the log tail has to regex the JSON back out (r07/r08
-      // artifacts ended up with "parsed": null). A machine-readable
-      // artifact belongs at a stable path, not inside a log. Full runs
-      // only — a dev SUBSET run must not clobber the driver's artifact.
-      // The FILE variant carries the per-query draw spread ([min,max]
-      // of the best-of-3 draws) so a judge can separate ambient noise
-      // from plan regressions without the sbt log tail; the stdout
-      // twin stays spread-free — 127 extra [min,max] pairs would blow
-      // the ~2000-char capture window the compact line exists to fit.
-      if (fullRun) {
-        val compactFile =
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_COMPACT", "BENCH_COMPACT.json")
-        try java.nio.file.Files.write(java.nio.file.Paths.get(compactFile),
-          (compact(line, fullPath, withSpread = true) + "\n").getBytes("UTF-8"))
-        catch { case e: Exception =>
-          System.err.println(s"[bench] could not write $compactFile: $e") }
-      }
-      // ... and stays the process's FINAL stdout line (bare when run
-      // outside sbt, e.g. via java -cp).
-      println(compactLine)
-    }
-  }
-
-  /** Re-serialize a full bench line with short query ids ("q51", "st03")
-    * and PER-ENTRY adaptive precision; every id is unique because names
-    * are `<prefix><number>_...`. Keeps the same envelope plus a pointer
-    * to the full-precision file. `withSpread = true` (the BENCH_COMPACT
-    * file variant) also carries each query's [min,max] draw spread and
-    * never degrades below centiseconds.
-    *
-    * Precision contract (the r14 lesson): the driver keeps only the
-    * LAST ~2000 chars of stdout, and 202 ids at centiseconds is ~2360
-    * chars — it can never fit whole. r14's all-or-nothing cascade
-    * (centi → deci → whole for EVERY entry) therefore collapsed the
-    * whole map to integers, handing the judge "a07":5 for a true
-    * 4.6 s and "q01":0 for 0.4 s. The fix bounds the RELATIVE error
-    * instead: entries start at centiseconds and are demoted one at a
-    * time LARGEST VALUE FIRST, because a half-step of quantization
-    * costs 0.5/v (whole) or 0.05/v (deci) of relative error — smallest
-    * exactly where v is biggest. Result: a 6 s soloist rounds to "6"
-    * (±8 %), while the sub-second bulk — where integer rounding was
-    * 100 % error — keeps centiseconds as long as the budget allows.
-    * Subset runs (fewer ids) fit all-centi untouched. */
-  private[graft] def compact(line: String, fullPath: String,
-      withSpread: Boolean = false, budget: Int = 1960): String = {
-    val q = """"([a-z]+[0-9]+)(?:_[a-z0-9_]*)?":([0-9.eE+-]+)""".r
-    val qsPart = line.substring(line.indexOf("\"queries\":") + 10)
-    val end = {  // matching close brace of the queries object
-      var depth = 0; var i = 0
-      while (i < qsPart.length && (depth != 0 || i == 0)) {
-        if (qsPart(i) == '{') depth += 1
-        else if (qsPart(i) == '}') depth -= 1
-        i += 1
-      }
-      i
-    }
-    val entries = q.findAllMatchIn(qsPart.substring(0, end))
-      .map(m => (m.group(1), m.group(2).toDouble)).toSeq
-    val total = entries.map(_._2).sum
-    // Locale-pinned formatting: the f-interpolator uses the JVM default
-    // locale, which on comma-decimal locales would emit "1,23" and
-    // break the JSON contract.
-    def s2(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    // Per-query values are the line's bulk (~11 chars × |queries|), so
-    // they get trailing-zero trimming ("0.50"→"0.5", "1.00"→"1" — still
-    // valid JSON numbers) and, below, an adaptive decisecond fallback:
-    // the capture window is fixed at ~2000 chars while the surface
-    // keeps growing, and the FULL-precision record lives in
-    // BENCH_FULL.json / BENCH_COMPACT.json either way — the stdout
-    // twin only has to survive the tail capture whole.
-    def trim(s: String) =
-      if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse
-      else s
-    def s1(v: Double) =
-      trim(String.format(java.util.Locale.ROOT, "%.1f", Double.box(v)))
-    def s0(v: Double) = String.valueOf(math.round(v))
-    // per-entry rendering level: 0 = centi, 1 = deci, 2 = whole
-    val renders = entries.map { case (k, v) =>
-      (k, v, Array(trim(s2(v)), s1(v), s0(v))) }
-    val lvl = Array.fill(entries.size)(0)
-    def qs = renders.zipWithIndex
-      .map { case ((k, _, r), i) => s""""$k":${r(lvl(i))}""" }
-      .mkString("{", ",", "}")
-    val fPart = line.substring(line.indexOf("\"failed\":"))
-    val failed = fPart.substring(9, fPart.indexOf(']') + 1)
-    val sf = line.substring(line.indexOf("\"sf\":"))
-      .stripPrefix("\"sf\":").takeWhile(_ != '}')
-    val spIdx = line.indexOf("\"spread\":")
-    val spreadField =
-      if (!withSpread || spIdx < 0) ""
-      else {
-        val spEnd = objectEnd(line, spIdx + 9)
-        val sp = """"([a-z]+[0-9]+)(?:_[a-z0-9_]*)?":\[([0-9.eE+-]+),([0-9.eE+-]+)\]""".r
-        val es = sp.findAllMatchIn(line.substring(spIdx + 9, spEnd))
-          .map(m => s""""${m.group(1)}":[${s2(m.group(2).toDouble)},${s2(m.group(3).toDouble)}]""")
-          .mkString("{", ",", "}")
-        s""","spread":$es"""
-      }
-    def assemble =
-      s"""{"metric":"total","value":${s2(total)},"unit":"sec","n":${entries.size},"queries":$qs,"failed":$failed$spreadField,"sf":$sf,"full":"$fullPath"}"""
-    // the spread-carrying FILE variant has no capture window to fit and
-    // never degrades; only the stdout twin demotes — one entry at a
-    // time, largest value first (scaladoc above) — until it fits the
-    // budget. Past the point where even whole seconds overflow
-    // (~240 ids, the r11 ceiling) it becomes a count+total+failed
-    // DIGEST: the per-query map is elided to the 10 slowest (the
-    // plan-regression signal) plus a pointer at the full record, which
-    // always lives in BENCH_FULL/BENCH_COMPACT.
-    if (withSpread) return assemble
-    // One candidate demotion per (entry, level), greedily applied in
-    // ascending added-relative-error PER CHARACTER SAVED: the error a
-    // demotion adds is half a quantization step over the value (0.05/v
-    // for →deci, 0.5/v for →whole; v floored at the ~0.25 s ambient
-    // noise floor — quantizing a 40 ms query is free, its draws vary
-    // more than that), and its benefit is the rendered chars it frees.
-    // A 13 s soloist goes centi→deci→whole and a 0.04 s query collapses
-    // to "0" before a 0.6 s query loses its decisecond — the knapsack
-    // order that keeps precision where the round-over-round table
-    // needs it. For one entry →deci always sorts before →whole (10×
-    // smaller error, savings within [0.5, 3] chars), so levels apply
-    // in sequence; the max() guard keeps that an invariant, not a hope.
-    val candidates = renders.zipWithIndex.flatMap { case ((k, v, r), i) =>
-      Seq(1, 2).map { t =>
-        val err = math.pow(10, t - 2) / 2 / math.max(v, 0.25)
-        val saved = math.max((r(t - 1).length - r(t).length).toDouble, 0.5)
-        (err / saved, k, t, i)
-      }
-    }.sortBy { case (ratio, k, t, _) => (ratio, k, t) }
-    var out = assemble
-    val it = candidates.iterator
-    while (out.length > budget && it.hasNext) {
-      val (_, _, target, i) = it.next()
-      lvl(i) = math.max(lvl(i), target)
-      out = assemble
-    }
-    if (out.length <= budget) out
-    else {
-      val top = entries.sortBy(-_._2).take(10)
-      val topJson = top
-        .map { case (k, v) => s""""$k":${trim(s2(v))}""" }
-        .mkString("{", ",", "}")
-      // elided = what top10 does NOT carry (n stays the total)
-      s"""{"metric":"total","value":${s2(total)},"unit":"sec","n":${
-        entries.size},"queries_elided":${entries.size - top.size
-        },"top10":$topJson,"failed":$failed,"sf":$sf,"full":"$fullPath"}"""
+      // the same full line is the process's final stdout line
+      println(line)
     }
   }
 
@@ -459,84 +303,7 @@ object Bench {
     * empty) with `count()`, return the JSON line. */
   private def runSuite(args: Seq[String], warmup: Boolean): String = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE ON by default — matching the DEPLOYMENT.md cluster
-      // recommendation, so the measured config IS the shipped config.
-      // History: round-5's FULL surface saw c03's contraction loop hit
-      // 73 s AQE-on (re-planning + re-codegen of every lazily-cut
-      // round), arguing for off-locally. The round-6 lazy-truncation
-      // rework removed that pathology, and two same-surface A/Bs since
-      // (r8: 112.3 s on vs 116.6 s off; c03 4.6 s, c11 4.1 s AQE-on)
-      // confirm on is now neutral-to-faster everywhere. Set
-      // SPARK_GRAFT_AQE=false only to reproduce historical off runs.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // AQE partition coalescing ON (the Spark default) since r15: the
-      // r14 driver run measured local[32] 35 % SLOWER than local[8] on
-      // identical code — at sf0.1 every exchange carries KB-scale data
-      // into `cpus` reduce tasks, so a 32-core run pays 4× the tiny-task
-      // fixed cost of an 8-core run for zero extra parallelism (worst:
-      // t17 1.6×, t08/m04 1.65× slower at 32 cores, measured warm this
-      // session). Coalescing merges those KB partitions down and the
-      // inversion disappears. parallelismFirst stays at its true
-      // default, so the merge target is max(bytes/parallelism,
-      // minPartitionSize): the floor is lowered 1m → 64k because the
-      // CPU-dense mid-size shuffles (the documents/embeddings fan-outs,
-      // exploded gram tables — single-digit-MB but seconds of CPU)
-      // must KEEP their width; 64k only collapses the genuinely
-      // featherweight exchanges. Scale story: the floor binds only
-      // when bytes/parallelism < 64k — at 100 TB no query-path shuffle
-      // is that small, so the setting is inert there (production keeps
-      // its own advisory sizing, DEPLOYMENT.md §AQE); it is a
-      // tiny-input de-overheader, not a local tuning of real shuffles.
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART", "64k"))
-      // 4m, deliberately BELOW Spark's 10m default: a broadcast hash
-      // relation is built on ONE thread, so a "small" 600k-row side
-      // that sneaks under a fat threshold serializes the whole stage
-      // (observed: q04 28s from broadcasting projected lineitem).
-      // True dims are far under 4m at any bench SF; genuinely-small
-      // intermediates are hinted with broadcast() at the query site.
-      .config("spark.sql.autoBroadcastJoinThreshold", "4m")
-      // Align whole-stage-codegen fallback with HotSpot's 8000-bytecode
-      // JIT ceiling (DontCompileHugeMethods): a fused method over this
-      // size would never be JIT-compiled and runs interpreted at
-      // 10-50x. SPARK-21871's knob.
-      .config("spark.sql.codegen.hugeMethodLimit", "4000")
-      // Split generated expression code into ~256-byte-estimate
-      // methods (default 1024): keeps every generated method far below
-      // HotSpot's compile ceiling so the JIT always wins; fat methods
-      // (decimal money math) otherwise sat in a dead zone where C2
-      // sometimes never compiled them and a 200k-row task burned
-      // minutes interpreted (observed in Decimal.changePrecision).
-      .config("spark.sql.codegen.methodSplitThreshold", "256")
-      // Catalyst extension point: range-join binning rule + SQL
-      // function registry (graft.GraftExtensions scaladoc).
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rangeJoin.binSeconds", "3600")
-      // LSH geometry: UNSET by default so Similarity's corpus-size
-      // auto-sizing (bits ∝ log2 n) is the measured path; the
-      // SPARK_GRAFT_LSH_* envs pass an explicit override through for
-      // geometry experiments.
-      .config(Map.empty[String, String] ++
-        sys.env.get("SPARK_GRAFT_LSH_PLANES").map("spark.graft.lsh.planes" -> _) ++
-        sys.env.get("SPARK_GRAFT_LSH_BANDS").map("spark.graft.lsh.bands" -> _))
-      // tmpfs scratch for shuffle/broadcast blocks when available —
-      // the sandbox block device write-throttles intermittently and
-      // poisons shuffle-heavy timings (LocalScratch scaladoc).
-      .config(LocalScratch.conf)
-      // dev-only: SPARK_GRAFT_EVENTLOG=true dumps per-stage metrics
-      .config("spark.eventLog.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_EVENTLOG", "false"))
-      .config("spark.eventLog.dir", "/tmp/spark-events")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // Warm the JVM/codegen once on the smallest SF so the first timed
     // query doesn't also pay first-call framework classloading. ONE
@@ -686,8 +453,8 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fj = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // placed AFTER "failed": compact() and the driver locate the failed
-    // array by its first ']', which must not be preceded by message text
+    // placed AFTER "failed": runIsolated locates the failed array by its
+    // first ']', which must not be preceded by message text
     val ej = errors.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":\"" + esc(v) + "\"" }
       .mkString("{", ",", "}")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan (and optionally row
   * counts of intermediate interest) for named queries.
   * Usage: runMain graft.Explain <sfDir> <query...>
@@ -10,32 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "4m")
-      // Align whole-stage-codegen fallback with HotSpot's 8000-bytecode
-      // JIT ceiling (DontCompileHugeMethods): a fused method over this
-      // size would never be JIT-compiled and runs interpreted at 10-50x.
-      // Falling back to per-operator execution keeps codegen'd
-      // projections AND JIT-able method sizes. SPARK-21871's knob.
-      .config("spark.sql.codegen.hugeMethodLimit", "4000")
-      // Split generated expression code into ~256-byte-estimate methods
-      // (default 1024): keeps every generated method far below HotSpot's
-      // compile ceiling so the JIT always wins; fat methods (decimal
-      // money math) otherwise sat in a dead zone where C2 sometimes
-      // never compiled them and a 200k-row task burned minutes in the
-      // interpreter (observed in Decimal.changePrecision).
-      .config("spark.sql.codegen.methodSplitThreshold", "256")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rangeJoin.binSeconds", "3600")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     names.foreach {
       case "dev_d02_buckets" =>
         // histogram of LSH band-bucket sizes (skew diagnosis)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import graft.sources.{JdbcSink, ParquetSink, RelationalSink, SchemaMapper}
 
 /** Reference-parity entry point: the WHOLE behavior of
@@ -27,13 +27,7 @@ object IngestMain {
     val table = if (args.length > 1) args(1) else "flights"
     val jdbcUrl = args.lift(2)
 
-    val spark = SparkSession.builder()
-      // one worker thread per host core unless SPARK_GRAFT_CPUS says otherwise
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "*")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val t0 = System.nanoTime()
     val df = sources.ParquetSource.read(spark, path)

@@ -1,7 +1,8 @@
 package graft
 
-/** Scratch-disk selection for the LOCAL harness mains (Bench / Verify /
-  * StreamBench / ScaleData) and the test session: prefer a tmpfs for
+/** Scratch-disk selection for every local session built by
+  * [[GraftSession]] (Bench, Verify, Explain, StreamBench, IngestMain,
+  * ScaleData and the test session): prefer a tmpfs for
   * `spark.local.dir`.
   *
   * Why: `spark.local.dir` hosts shuffle files, broadcast pieces and
@@ -19,7 +20,7 @@ package graft
   */
 object LocalScratch {
 
-  /** Conf map to splat into a local `SparkSession.builder`: points
+  /** Conf map that [[GraftSession]] adds to its profile: points
     * `spark.local.dir` at a tmpfs path when one exists and the operator
     * hasn't already chosen dirs via `SPARK_LOCAL_DIRS`. Empty map (no
     * override) otherwise — including on hosts without /dev/shm. */

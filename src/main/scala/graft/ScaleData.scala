@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Dev tool: generate a scratch ~sf1 corpus (10× the sf0.1 fixtures)
@@ -29,14 +29,7 @@ object ScaleData {
     val scale = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val docsOnly = args.drop(2).headOption.contains("docs")
     val ordersOnly = args.drop(2).headOption.contains("orders")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(LocalScratch.conf) // tmpfs shuffle scratch (see scaladoc)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val vocab = Seq("spark", "line", "column", "order", "small", "sort",
       "fast", "value", "scan", "batch", "part", "query", "agg", "table",

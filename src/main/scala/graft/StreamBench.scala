@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStreams
 
@@ -32,7 +32,6 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val chunks = sys.env.getOrElse("SPARK_GRAFT_CHUNKS", "20").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // same scratch policy as the batch fixtures (LocalScratch.scratchDir
     // scaladoc): the staged arrival files and the stream checkpoints
     // both live here, and the sandbox device's intermittent
@@ -41,18 +40,7 @@ object StreamBench {
     val stage = sys.env.getOrElse("SPARK_GRAFT_STREAM_STAGE",
       LocalScratch.scratchDir + "/graft-streambench")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ui.retainedExecutions", "10")
-      // tmpfs scratch for shuffle/broadcast blocks (LocalScratch
-      // scaladoc); stream CHECKPOINTS stay wherever `stage` points —
-      // they are part of the measured operator cost.
-      .config(LocalScratch.conf)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // recentProgress retains only numRecentProgressUpdates entries
     // (default 100): with more chunks than that the rows/batch/latency

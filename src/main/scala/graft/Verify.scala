@@ -1,55 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare in tools/check_oracle.py.
+  * A query that throws does not stop the dump; the run ends by listing
+  * every failed query with its exception class and exits non-zero. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val only: Set[String] = rest.toSet // optional subset for dev iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Same join-planning knobs as Bench, so the plans the oracle
-      // verifies are the plans the bench measures.
-      .config("spark.sql.autoBroadcastJoinThreshold", "4m")
-      // see Bench.scala: AQE on by default everywhere since round 9
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Align whole-stage-codegen fallback with HotSpot's 8000-bytecode
-      // JIT ceiling (DontCompileHugeMethods): a fused method over this
-      // size would never be JIT-compiled and runs interpreted at 10-50x.
-      // Falling back to per-operator execution keeps codegen'd
-      // projections AND JIT-able method sizes. SPARK-21871's knob.
-      .config("spark.sql.codegen.hugeMethodLimit", "4000")
-      // Split generated expression code into ~256-byte-estimate methods
-      // (default 1024): keeps every generated method far below HotSpot's
-      // compile ceiling so the JIT always wins; fat methods (decimal
-      // money math) otherwise sat in a dead zone where C2 sometimes
-      // never compiled them and a 200k-row task burned minutes in the
-      // interpreter (observed in Decimal.changePrecision).
-      .config("spark.sql.codegen.methodSplitThreshold", "256")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // Catalyst extension point: range-join binning rule + SQL
-      // function registry (graft.GraftExtensions scaladoc).
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rangeJoin.binSeconds", "3600")
-      // tmpfs scratch (LocalScratch scaladoc): the sandbox block device
-      // write-throttles intermittently; shuffle/broadcast scratch on
-      // RAM keeps the correctness drive off the pathological path.
-      .config(LocalScratch.conf)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val attempted = SparkEntry.queries.keys.toSeq
+      .filter(name => only.isEmpty || only(name))
+    val failed = attempted.flatMap { name =>
+      try {
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> e.getClass.getName)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -64,9 +34,16 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // only the attempted queries: check_oracle fails an oracle key
+    // whose output dir is missing, and a subset run must stay checkable
+    val json = SparkEntry.oracleSql.filter { case (k, _) => attempted.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} of ${attempted.size} queries failed:")
+      failed.foreach { case (name, cls) => System.err.println(s"  $name: $cls") }
+      sys.exit(1)
+    }
   }
 }

@@ -77,7 +77,8 @@ object Similarity {
     * job, memoized per plan per session), so a 100 TB run scales its
     * bucket space without anyone remembering a knob. The confs
     * OVERRIDE the heuristic for deployments that have tuned geometry
-    * (Bench passes them through from SPARK_GRAFT_LSH_* env). */
+    * (set them as `-Dspark.graft.lsh.*` JVM properties; Bench passes
+    * its JVM arguments on to its child JVMs). */
   val PlanesConf = "spark.graft.lsh.planes"
   val BandsConf = "spark.graft.lsh.bands"
 

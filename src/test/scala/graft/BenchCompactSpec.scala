@@ -2,176 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The driver's artifact capture keeps only the last ~2000 chars of
-  * Bench stdout — BENCH_r05 lost half its per-query record that way.
-  * These pin the compact stdout twin: every query must survive under
-  * a unique short id, and the whole line must fit the capture window.
+/** Pins `Bench.objectEnd`, which bounds the parent's scan of each child
+  * JVM's `errors` and `spread` objects when `runIsolated` merges the
+  * family lines. (The stdout compact renderer this spec was named for
+  * is gone.)
   */
 class BenchCompactSpec extends AnyFunSuite {
-
-  test("compact keeps every query under its unique short id and fits 2000 chars") {
-    // synthesize a full-size line: every registered query at full precision
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val full = names.zipWithIndex
-      .map { case (n, i) => s""""$n":${1.0 + i * 0.037}""" }
-      .mkString(
-        """{"metric":"total","value":999.0,"unit":"sec","queries":{""",
-        ",",
-        """},"failed":["q51_sole_blame_supplier"],"sf":"/root/testdata/sf0.1"}""")
-    val c = Bench.compact(full, "/root/repo/BENCH_FULL.json")
-    assert(c.length <= 2000, s"compact line is ${c.length} chars")
-    // every query survives as its unique prefix id
-    val shortIds = names.map(_.takeWhile(ch => ch.isLetter || ch.isDigit))
-    assert(shortIds.distinct.size === names.size) // prefixes are unique
-    shortIds.foreach(id => assert(c.contains(s""""$id":"""), s"missing $id"))
-    assert(c.contains(s""""n":${names.size}"""))
-    assert(c.contains(""""failed":["q51_sole_blame_supplier"]"""))
-    assert(c.contains(""""sf":"/root/testdata/sf0.1""""))
-  }
-
-  test("compact degrades per-entry when centiseconds would overflow " +
-      "the capture window, and every id still survives") {
-    // the surface keeps growing while the capture window does not:
-    // when all-centisecond values would overflow, entries demote ONE
-    // AT A TIME, largest value first (bounded relative error — the r15
-    // scheme), never the whole map at once (full precision stays in
-    // BENCH_FULL.json / the spread-carrying BENCH_COMPACT.json, which
-    // never degrades). Past ~240 ids even whole seconds overflow and
-    // the twin becomes a digest — a different channel, not more trim.
-    val names = SparkEntry.queries.keys.toSeq.sorted ++
-      (1 to 12).map(i => f"z$i%02d_synthetic_growth")
-    val full = names.zipWithIndex
-      .map { case (n, i) => s""""$n":${1.0 + i * 0.037}""" }
-      .mkString(
-        """{"metric":"total","value":999.0,"unit":"sec","queries":{""",
-        ",",
-        """},"failed":[],"sf":"/root/testdata/sf0.1"}""")
-    val c = Bench.compact(full, "/root/repo/BENCH_FULL.json")
-    assert(c.length <= 2000, s"compact line is ${c.length} chars")
-    names.foreach { n =>
-      val id = n.takeWhile(ch => ch.isLetter || ch.isDigit)
-      assert(c.contains(s""""$id":"""), s"missing $id")
-    }
-  }
-
-  test("202 ids / ~300 s total: sub-second entries keep centiseconds, " +
-      "only the largest values demote (the r15 anti-integer-quantization pin)") {
-    // The r14 driver artifact collapsed ALL 202 per-query values to
-    // whole seconds ("a07":5 for a true 4.6 s; "q01":0 for 0.4 s),
-    // costing the round its per-query comparison. The adaptive scheme
-    // bounds RELATIVE error instead: demotion goes largest-value-first
-    // (a 6 s soloist at ±0.5 s is 8 %; a 0.4 s query at ±0.5 s is
-    // 125 %), so the sub-second bulk must keep its centiseconds.
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    // realistic skewed mix summing ~300 s: slow soloists, a midrange
-    // band, a sub-second bulk (deterministic, index-derived)
-    val vals: Seq[(String, Double)] = names.zipWithIndex.map { case (n, i) =>
-      val v =
-        if (i % 29 == 0) 6.0 + (i % 7) * 1.3
-        else if (i % 5 == 0) 2.0 + (i % 3) * 0.75
-        else 0.31 + (i % 17) * 0.043
-      n -> math.rint(v * 1000) / 1000
-    }
-    val full = vals.map { case (n, v) => s""""$n":$v""" }
-      .mkString(
-        s"""{"metric":"total","value":${vals.map(_._2).sum},"unit":"sec","queries":{""",
-        ",",
-        """},"failed":[],"sf":"/root/testdata/sf0.1"}""")
-    val c = Bench.compact(full, "/root/repo/BENCH_FULL.json")
-    assert(c.length <= 1960, s"compact line is ${c.length} chars")
-    val byId = vals.map { case (n, v) =>
-      n.takeWhile(ch => ch.isLetter || ch.isDigit) -> v }.toMap
-    val rendered = """"([a-z]+[0-9]+)":([0-9.]+)""".r
-      .findAllMatchIn(c.substring(c.indexOf("\"queries\":")))
-      .map(m => m.group(1) -> m.group(2)).toMap
-    assert(rendered.keySet === byId.keySet, "ids lost from the map")
-    def decimals(s: String) = if (s.contains('.')) s.length - s.indexOf('.') - 1 else 0
-    // sub-second precision SURVIVES for the bulk — the map is never
-    // wholesale-integer again (202 ids at all-centi is ~2360 chars, so
-    // FULL centi cannot fit a 2000-char tail; the pin is that demotion
-    // stays per-entry and most of the map keeps a decimal)
-    val withDecimals = rendered.count { case (_, s) => decimals(s) >= 1 }
-    assert(withDecimals >= 60,
-      s"only $withDecimals entries kept sub-second precision:\n$c")
-    // every rendered value is within a half-step of the truth — the
-    // driver's table is never further off than its printed precision
-    rendered.foreach { case (id, s) =>
-      val step = math.pow(10, -decimals(s))
-      assert(math.abs(s.toDouble - byId(id)) <= step / 2 + 1e-9,
-        s"$id rendered $s vs true ${byId(id)}")
-    }
-    // and a dev-subset line (few ids) keeps FULL centiseconds — the
-    // A/B evidence channel never quantizes
-    val subset = vals.take(30)
-    val subLine = subset.map { case (n, v) => s""""$n":$v""" }
-      .mkString(
-        s"""{"metric":"total","value":${subset.map(_._2).sum},"unit":"sec","queries":{""",
-        ",",
-        """},"failed":[],"sf":"/root/testdata/sf0.1"}""")
-    val sc = Bench.compact(subLine, "/root/repo/BENCH_SUBSET.json")
-    subset.foreach { case (n, v) =>
-      val id = n.takeWhile(ch => ch.isLetter || ch.isDigit)
-      val centi = {
-        val s = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-        if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse else s
-      }
-      assert(sc.contains(s""""$id":$centi"""), s"subset lost centi for $id: $sc")
-    }
-  }
-
-  test("past the whole-second ceiling the stdout twin becomes a digest " +
-      "(count+total+failed+top10) and still fits 2000 chars at 250 ids") {
-    // the per-id envelope supports ~240 ids even at whole seconds; the
-    // r11 verdict flagged that the surface hits that next — past the
-    // ceiling the per-query map is ELIDED to the 10 slowest (the
-    // plan-regression signal) and the full record stays in
-    // BENCH_FULL/BENCH_COMPACT, which never degrade
-    val names = (1 to 250).map(i => f"z$i%03d_synthetic_growth_padding")
-    val full = names.zipWithIndex
-      .map { case (n, i) => s""""$n":${1.0 + i * 0.037}""" }
-      .mkString(
-        """{"metric":"total","value":999.0,"unit":"sec","queries":{""",
-        ",",
-        """},"failed":["z007_synthetic_growth_padding"],"sf":"/root/testdata/sf0.1"}""")
-    val c = Bench.compact(full, "/root/repo/BENCH_FULL.json")
-    assert(c.length <= 2000, s"digest line is ${c.length} chars")
-    assert(c.contains(""""n":250"""), c)
-    // elided counts only what top10 does NOT carry: 250 − 10 (the
-    // ADVICE self-consistency fix — n stays the total)
-    assert(c.contains(""""queries_elided":240"""), c)
-    assert(c.contains(""""failed":["z007_synthetic_growth_padding"]"""), c)
-    assert(c.contains(""""full":"/root/repo/BENCH_FULL.json""""), c)
-    // the 10 slowest survive as the top10 map — here the highest
-    // indices carry the largest synthetic values
-    assert(c.contains(""""top10":{"z250":"""), c)
-    assert(c.contains(""""z241":"""), c)
-    assert(!c.contains(""""z001":"""), c)
-    // the FILE variant never degrades: same 250-id line with spread
-    // stays a full per-query map
-    val withSp = Bench.compact(full, "/root/repo/BENCH_FULL.json",
-      withSpread = true)
-    assert(withSp.contains(""""z001":"""), "file variant lost per-query map")
-  }
-
-  test("compact file variant carries per-query draw spread; stdout variant stays slim") {
-    // the BENCH_COMPACT.json FILE records each query's [min,max] draw
-    // spread (noise vs plan-regression separation without the log
-    // tail); the stdout twin must NOT — 127 extra pairs would blow the
-    // ~2000-char capture window
-    val full =
-      """{"metric":"total","value":3.0,"unit":"sec","queries":{"q01_pricing_summary":1.25,"c14_bloom_decontaminate":1.75},""" +
-        """"failed":[],"errors":{},""" +
-        """"spread":{"q01_pricing_summary":[1.25,1.311],"c14_bloom_decontaminate":[1.75,4.02]},""" +
-        """"sf":"/root/testdata/sf0.1"}"""
-    val withSp = Bench.compact(full, "/x/BENCH_FULL.json", withSpread = true)
-    assert(withSp.contains(""""spread":{"q01":[1.25,1.31],"c14":[1.75,4.02]}"""), withSp)
-    assert(withSp.contains(""""q01":1.25"""), withSp)
-    val noSp = Bench.compact(full, "/x/BENCH_FULL.json")
-    assert(!noSp.contains("spread"), noSp)
-    // a pre-spread line (old artifact replayed) must not break either variant
-    val old = full.replace(""""spread":{"q01_pricing_summary":[1.25,1.311],"c14_bloom_decontaminate":[1.75,4.02]},""", "")
-    assert(!Bench.compact(old, "/x/f.json", withSpread = true).contains("spread"))
-  }
 
   test("objectEnd bounds the errors scan despite braces/escapes in messages") {
     // a message containing '{', '}', an escaped quote, AND a later
@@ -192,23 +28,5 @@ class BenchCompactSpec extends AnyFunSuite {
     // unbalanced input degrades to scan-to-end, never throws
     val unbalanced = """{"a":"b"""
     assert(Bench.objectEnd(unbalanced, 0) == unbalanced.length)
-  }
-
-  test("compact tolerates the errors object (messages with brackets/escapes)") {
-    // a failed query's message may contain ']', '}', escaped quotes —
-    // compact's positional parsing (brace-match on queries, first ']'
-    // for failed, indexOf for sf) must not be derailed because errors
-    // sits AFTER failed and BEFORE sf in the envelope
-    val full =
-      """{"metric":"total","value":9.9,"unit":"sec","queries":{"q01_pricing_summary":1.25,"st05_stateful_user_totals":0.1},""" +
-        """"failed":["st05_stateful_user_totals"],""" +
-        """"errors":{"st05_stateful_user_totals":"AnalysisException: [DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE] unix_millis(ts) \" [x] {y}"},""" +
-        """"sf":"/root/testdata/sf0.1"}"""
-    val c = Bench.compact(full, "/root/repo/BENCH_FULL.json")
-    assert(c.contains(""""q01":1.25"""), c)
-    assert(c.contains(""""st05":0.1"""), c) // trailing zero trimmed
-    assert(c.contains(""""failed":["st05_stateful_user_totals"]"""), c)
-    assert(c.contains(""""sf":"/root/testdata/sf0.1""""), c)
-    assert(c.contains(""""n":2"""), c)
   }
 }

@@ -37,7 +37,7 @@ class BenchSoloistSpec extends AnyFunSuite {
       regs = reg.findAllMatchIn(src).map(m => (m.start, m.group(1))).toVector
       m <- call.findAllMatchIn(src).toSeq
       encl <- regs.takeWhile(_._1 < m.start).lastOption.map(_._2).toSeq
-      // only real registrations count (Explain/Profile call queries()
+      // only real registrations count (Explain calls queries()
       // outside any registry; SparkEntry's aggregation references too)
       if SparkEntry.queries.contains(encl) && SparkEntry.queries.contains(m.group(1))
       if encl != m.group(1)

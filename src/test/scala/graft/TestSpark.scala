@@ -2,20 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (JVM is forked once by sbt). */
+/** One shared local session for all suites (JVM is forked once by sbt),
+  * on the same [[GraftSession]] profile as Bench and Verify. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rangeJoin.binSeconds", "3600")
-      .config(LocalScratch.conf) // tmpfs shuffle scratch (see scaladoc)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession(4)
     // The surface's DOCUMENTED bounded global windows (gate rows, the
     // t11 held-out AUC slice, source-count-sized aggregates) each log
     // WindowExec's "No Partition Defined" warning on every run —

@@ -2,7 +2,8 @@
 """Local replica of the driver's correctness gate (dev tool only; the
 engine itself is pure Scala/Spark). Reads Verify output dir, runs each
 oracle SQL in DuckDB against the same sf tables, compares row count,
-column names, and value hash (columns sorted by name, rows sorted)."""
+column names, and value hash (columns sorted by name, rows sorted).
+An oracle key with no output dir fails as missing."""
 import sys, json, glob, os
 import duckdb
 
@@ -27,6 +28,11 @@ def norm(df):
     return df
 
 fails, passes, skips = [], [], []
+# an oracle key without an output dir is a query that threw (Verify
+# writes keys only for the queries it attempted)
+for name in sorted(oracle):
+    if not os.path.isdir(os.path.join(outdir, name)):
+        fails.append(f"{name}: FAIL (missing)")
 for name in sorted(os.listdir(outdir)):
     d = os.path.join(outdir, name)
     if not os.path.isdir(d):
