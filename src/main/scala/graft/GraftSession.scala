@@ -63,6 +63,15 @@ object GraftSession {
     // sometimes never compiled them, and a 200k-row task burned minutes
     // in the interpreter (observed in Decimal.changePrecision).
     "spark.sql.codegen.methodSplitThreshold" -> "256",
+    // Spark's cache of compiled generated classes is JVM-wide, sized
+    // once when the first plan compiles, and holds 100 classes by
+    // default. One pass of the ten perfbench query_scan queries
+    // generates 219-225 distinct classes, so the LRU evicted every class
+    // before its next use: each pass recompiled all of them (about 4.3 s
+    // of Janino in a 10-14 s pass) and ran the fresh classes cold in the
+    // JIT. 1024 holds about four such working sets. A static conf: it
+    // must be set before the session's first query.
+    "spark.sql.codegen.cache.maxEntries" -> "1024",
     // Catalyst extension point: range-join binning rule and the SQL
     // function registry (GraftExtensions scaladoc).
     "spark.sql.extensions" -> "graft.GraftExtensions",

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column => native, expression}
 import graft.Tables
 import graft.Checkpoint.TruncateOps
+import graft.functions.{MinHashKernels, MinHashSignature, SignatureOverlap}
 
 /** Deduplication operators for large-scale training-data pipelines —
   * the capability layer the reference lacks entirely (its ingest is
@@ -12,19 +14,25 @@ import graft.Checkpoint.TruncateOps
   *
   * Scale stance (100 TB): every variant is expressed as hash/band keys
   * + shuffle-friendly groupBy/join — never an unbanded cross join, no
-  * driver-side state. Signature math runs row-wise under whole-stage
-  * codegen (posexplode → window → hash-aggregate); the shuffles are the
-  * per-doc clustering and the candidate-pair joins on band keys, all
-  * linear in the data.
+  * driver-side state. Signature math runs row-wise: MinHash signs each
+  * document in one native projection ([[graft.functions.MinHashSignature]]),
+  * SimHash votes in one hash-aggregate per document; the shuffles are
+  * that per-doc clustering and the candidate-pair joins on band keys,
+  * all linear in the data.
   */
 object Dedup {
 
   import org.apache.spark.sql.expressions.Window
 
-  private val NumHashes = 32 // MinHash signature length
+  private val NumHashes = MinHashKernels.NumHashes // MinHash signature length
   private val Bands = 8      // LSH bands → rows per band r = 32/8 = 4
 
-  /** One row per word-3-gram shingle hash: (doc_id, source, sh, full3).
+  /** The token array every shingle-based operator reads: the lower-cased
+    * text split on whitespace runs. */
+  private val tokens: Column = split(lower(col("text")), "\\s+")
+
+  /** One row per word-3-gram shingle hash: (doc_id, source, sh), for
+    * documents with at least 3 tokens.
     *
     * Construction is NARROW: `arrays_zip` of three slices of the one
     * `split()` array pairs each token with its two successors, then one
@@ -37,66 +45,43 @@ object Dedup {
     * document. This replaces a posexplode + window-lead pairing whose
     * doc_id shuffle + sort of every token row was the gram pipeline's
     * dominant stage (the t08 profile: 5.3 s of 5.7 s at gen-sf1 for the
-    * same shape; only d02's signature groupBy ever reused that
-    * clustering — d04's distinct and the band joins reshuffle on wider
-    * keys regardless, and the signature partial-agg shrinks rows
-    * ~tokens→32 per doc before its exchange, far cheaper than sorting
-    * every token row).
+    * same shape).
     *
     * Shingle identity = xxhash64 of the three consecutive token hashes
-    * — BIT-IDENTICAL to the previous window formulation (same
-    * `xxhash64(xxhash64(tok_i), xxhash64(tok_i+1), xxhash64(tok_i+2))`
-    * longs), so every downstream signature, band, and pair is
-    * unchanged. Bijective with the token triple (and the gram string:
-    * tokens contain no whitespace) modulo negligible 64-bit collisions,
-    * which exact-gram set math already tolerates.
-    *
-    * Docs with <3 tokens contribute one fallback shingle (full3=false)
-    * via a second narrow leg so fuzzy dedup still signs them
-    * (`xxhash64(th0, th1|0, 0)`, exactly the old pos==0 row);
-    * exact-gram ops filter on full3.
+    * (`xxhash64(xxhash64(tok_i), xxhash64(tok_i+1), xxhash64(tok_i+2))`),
+    * the same longs [[MinHashSignature]] folds into signatures.
+    * Bijective with the token triple (and the gram string: tokens
+    * contain no whitespace) modulo negligible 64-bit collisions, which
+    * exact-gram set math already tolerates.
     */
   private def shingleRows(docs: DataFrame): DataFrame = {
-    val toks = split(lower(col("text")), "\\s+")
-    val nTriples = greatest(size(toks) - 2, lit(0))
-    val triples = docs
+    val nTriples = greatest(size(tokens) - 2, lit(0))
+    docs
       .select(col("doc_id"), col("source"), explode(arrays_zip(
-        slice(toks, lit(1), nTriples),
-        slice(toks, lit(2), nTriples),
-        slice(toks, lit(3), nTriples))).as("p"))
+        slice(tokens, lit(1), nTriples),
+        slice(tokens, lit(2), nTriples),
+        slice(tokens, lit(3), nTriples))).as("p"))
       .select(col("doc_id"), col("source"),
         xxhash64(xxhash64(col("p.0")), xxhash64(col("p.1")), xxhash64(col("p.2")))
-          .as("sh"),
-        lit(true).as("full3"))
-    val fallback = docs
-      .filter(size(toks) < 3 && size(toks) >= 1)
-      .select(col("doc_id"), col("source"),
-        xxhash64(xxhash64(toks(0)),
-          when(size(toks) >= 2, xxhash64(toks(1))).otherwise(lit(0L)),
-          lit(0L)).as("sh"),
-        lit(false).as("full3"))
-    triples.unionByName(fallback)
+          .as("sh"))
   }
 
-  /** doc_id + minhash signature (array of 32 longs).
+  /** doc_id + minhash signature (array of 32 longs): one row-local
+    * projection through the native [[MinHashSignature]] kernel — no
+    * shingle explode, no shuffle. The signature is the same 32 longs as
+    * the grouped form it replaced (explode the [[shingleRows]] hashes,
+    * then 32 `min(h1 + i·h2)` aggregates over doc_id); MinHashKernelSpec
+    * pins the two bit for bit.
     *
-    * The 32 hash families derive from the two 31-bit halves of the
-    * shingle hash (Carter–Wegman h_i = h1 + i·h2 — no further hashing),
-    * then 32 plain `min` aggregates in one hash-aggregation over
-    * doc_id. Masking to 31 bits keeps h1 + 31·h2 < 2^36, so the family
-    * can never overflow long arithmetic.
+    * Key contract: `doc_id` is unique in `docs`. The documents table and
+    * every twin corpus built from it satisfy this; rows sharing a doc_id
+    * would come out as separate signatures, not one merged one. A null
+    * `text` gives no row (split yields at least one token for any other
+    * string, so the kernel's null never reaches the output).
     */
-  private def minhashSignatures(docs: DataFrame): DataFrame = {
-    val rows = shingleRows(docs)
-      .select(col("doc_id"),
-        col("sh").bitwiseAND(lit(0x7FFFFFFFL)).as("h1"),
-        shiftrightunsigned(col("sh"), 32).bitwiseAND(lit(0x7FFFFFFFL)).as("h2"))
-    val mins = (0 until NumHashes).map(i =>
-      min(col("h1") + lit(i.toLong) * col("h2")).as(s"m$i"))
-    rows.groupBy("doc_id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), array((0 until NumHashes).map(i => col(s"m$i")): _*).as("sig"))
-  }
+  private[graft] def minhashSignatures(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), native(MinHashSignature(expression(tokens))).as("sig"))
 
   /** (doc_id, band_idx, band_hash) rows from a (doc_id, sig) relation —
     * the banding step alone, reusable over signatures that were
@@ -114,15 +99,11 @@ object Dedup {
   def bandedKeys(docs: DataFrame): DataFrame =
     bandsFromSigs(minhashSignatures(docs))
 
-  /** Estimated jaccard from two 32-long minhash signatures: 32 unrolled
-    * element comparisons, NOT zip_with∘filter — higher-order functions
-    * evaluate interpreted (outside whole-stage codegen) and their
-    * lambda dispatch goes megamorphic as more plans run in the JVM; a
-    * plain sum of element_at equality terms stays inside codegen. */
+  /** Estimated jaccard from two 32-long minhash signatures: the native
+    * [[SignatureOverlap]] kernel, one call in the generated code instead
+    * of 32 unrolled element comparisons. */
   private def sigOverlap(a: Column, b: Column): Column =
-    ((0 until NumHashes).map(i =>
-      when(a(i) === b(i), 1).otherwise(0))
-      .reduce(_ + _).cast(DoubleType) / NumHashes)
+    native(SignatureOverlap(expression(a), expression(b)))
 
   /** Full MinHash+LSH candidate-pair pipeline (the d02 body) over any
     * (doc_id, source, text) corpus: band-bucket self-join → unique id
@@ -133,7 +114,7 @@ object Dedup {
     // Band keys only — signatures are NOT carried through the
     // candidate join (a pair can match in several bands; dedupe the
     // id pairs first, then score each unique pair exactly once).
-    val banded = bandedKeys(docs)
+    val banded = bandsFromSigs(sigs)
     // shuffle_hash on every join over post-aggregate intermediates:
     // their size estimates are unreliable, and a mis-chosen
     // broadcast builds a huge hash relation on one thread (and
@@ -145,7 +126,10 @@ object Dedup {
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
       .distinct()
-    // ReuseExchange dedupes the identical signature subplans.
+    // Signing is a row-local projection, so each of the three signature
+    // consumers re-signs its documents; what they share is the
+    // documents fan-out exchange under that projection, which
+    // ReuseExchange runs once.
     pairs
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))
         .hint("shuffle_hash"), Seq("doc_a"))
@@ -201,8 +185,11 @@ object Dedup {
     * a post-aggregate estimate could mis-broadcast. */
   def incrementalDupes(s: SparkSession, shard: DataFrame,
                        indexDir: String): DataFrame = {
-    // referenced twice (banding + scoring): truncate so the shard is
-    // shingled/signed once, not re-run per consumer
+    // referenced twice (banding + scoring): truncate so the shard's
+    // lineage runs once, not per consumer. Signing itself is a cheap
+    // projection now; recomputing it per consumer measured no faster
+    // (d12 at sf0.1, warm medians 0.94-1.12 s pinned vs 1.03-1.05 s
+    // recomputed), and a caller's shard may carry a costly source.
     val shardSigs = minhashSignatures(shard).truncatedLazy
     val cands = bandsFromSigs(shardSigs)
       .select(col("band_idx"), col("band_hash"), col("doc_id").as("new_id"))
@@ -289,7 +276,7 @@ object Dedup {
 
   /** Offset separating injected twin ids from real doc ids in the
     * recall gates (d06/d07) — far above any fixture doc_id. */
-  private val TwinOffset = 1000000L
+  private[graft] val TwinOffset = 1000000L
 
   /** Injected near-duplicates with known ground truth: every 5th doc
     * with ≥ 4 tokens gets a twin (doc_id + TwinOffset) whose text
@@ -302,13 +289,13 @@ object Dedup {
     * doubled every pipeline stage and made the gate cost 2.5× the
     * operator it checks) while still spanning ~100 ground-truth pairs
     * at the gate SF. */
-  private def twinsOf(docs: DataFrame): DataFrame = docs
+  private[graft] def twinsOf(docs: DataFrame): DataFrame = docs
     .filter(col("doc_id") % 5 === 0 &&
       size(split(col("text"), "\\s+")) >= 4)
     .withColumn("doc_id", col("doc_id") + lit(TwinOffset))
     .withColumn("text", regexp_replace(col("text"), "\\s+\\S+$", ""))
 
-  private def withTwins(docs: DataFrame): DataFrame =
+  private[graft] def withTwins(docs: DataFrame): DataFrame =
     docs.unionByName(twinsOf(docs))
 
   /** (n_twins, found) → single assertion row mirrored by a literal in
@@ -681,8 +668,10 @@ object Dedup {
 
     // d18: VALUE-LEVEL ORACLE PARITY for the MinHash+LSH pipeline —
     // the same shingle → 32-minhash → 8-band → bucket-join → overlap
-    // pipeline as d02 (same shapes, same Carter–Wegman h1 + i·h2
-    // family, same band/row geometry), re-keyed on a hash both
+    // math as d02 (same Carter–Wegman h1 + i·h2 family, same band/row
+    // geometry; signed here as explode + 32 `min`s, the relational form
+    // DuckDB replays, where d02 signs in the native MinHashSignature
+    // kernel), re-keyed on a hash both
     // engines compute bit-identically: h1/h2 are the two 8-hex-char
     // halves of md5(gram) parsed digit-by-digit (instr over
     // '0123456789abcdef' — identical semantics in Spark and DuckDB),
@@ -904,8 +893,7 @@ object Dedup {
       // deduped gram rows (no separate sizes relation, no extra
       // joins); the join then carries only ids, an 8-byte hash, and
       // two ints per row.
-      val grams = shingleRows(documents)
-        .filter(col("full3")) // oracle scopes to docs with >= 3 tokens
+      val grams = shingleRows(documents) // oracle scopes to docs with >= 3 tokens
         .select("source", "doc_id", "sh").distinct()
         .withColumn("sz", count(lit(1)).over(Window.partitionBy("source", "doc_id")))
         // materialize the gram stage before the band join: the fused

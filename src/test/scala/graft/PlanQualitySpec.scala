@@ -59,6 +59,17 @@ class PlanQualitySpec extends AnyFunSuite {
       }
   }
 
+  test("d02 signs documents in one row-local projection, not a doc_id aggregate") {
+    // The signature is the native MinHashSignature kernel over each
+    // document's tokens: no shingle explode, no exchange on doc_id and
+    // no 32-min aggregate. The only HashAggregate left is the candidate
+    // pairs' distinct.
+    val p = plan("d02_dedup_minhash")
+    assert(p.contains("minhash_signature("), s"d02 lost the native signature kernel:\n$p")
+    assert(!p.contains("keys=[doc_id"), s"d02 aggregates on doc_id again:\n$p")
+    assert(!p.contains("min("), s"d02 computes min aggregates again:\n$p")
+  }
+
   test("d08 bands on LSH buckets, never a label equi-join (the d05 scale bomb)") {
     // executedPlan, not optimizedPlan: the logical relation prints the
     // table's FULL column list; pruning shows in the scan's ReadSchema.
