@@ -466,6 +466,44 @@ object Similarity {
         count(lit(1)).as("n_exact_pairs"),
         when(sum(col("hit")) >= minHits, 1L).otherwise(0L).as("recall_ok"))
 
+  /** s18's fusion (see its comment in [[queries]]) over a BM25
+    * candidate relation (q_id, doc_id, score): the dense leg, the RRF
+    * join and the final top-5. */
+  private[graft] def hybridRrf(s: SparkSession, d: String, bm25: DataFrame): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+      .select(col("vec_id"), asDoubleVec(col("embedding")).as("v"))
+    val q = emb.filter(col("vec_id") % 101 === 0 && col("vec_id") < 5050)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val cosRanks = emb.filter(col("vec_id") % 101 =!= 0)
+      .crossJoin(broadcast(q))
+      .withColumn("cos", cosine(col("qv"), col("v")))
+      .groupBy("q_id")
+      .agg(graft.functions.TopKRows.topk(
+        struct((-col("cos")).as("ns"), col("vec_id").as("id")), 20).as("top"))
+      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "e")))
+      .select(col("q_id"), col("e.id").as("doc_id"),
+        (col("pos") + 1).as("rk_cos"))
+    val bmRanks = bm25.groupBy("q_id")
+      .agg(graft.functions.TopKRows.topk(
+        struct((-col("score")).as("ns"), col("doc_id").as("id")), 20).as("top"))
+      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "e")))
+      .select(col("q_id"), col("e.id").as("doc_id"),
+        (col("pos") + 1).as("rk_bm"))
+    val fused = bmRanks
+      .join(cosRanks, Seq("q_id", "doc_id"), "full_outer")
+      .withColumn("rrf",
+        coalesce(lit(1.0) / (lit(60) + col("rk_bm")), lit(0.0)) +
+        coalesce(lit(1.0) / (lit(60) + col("rk_cos")), lit(0.0)))
+    fused.groupBy("q_id")
+      .agg(graft.functions.TopKRows.topk(
+        struct((-col("rrf")).as("ns"), col("doc_id").as("id"),
+          col("rrf").as("r")), 5).as("top"))
+      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "e")))
+      .select(col("q_id"), (col("pos") + 1).as("rk"),
+        col("e.id").as("doc_id"), round(col("e.r"), 6).as("rrf"))
+      .orderBy("q_id", "rk")
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Brute-force exact top-5 neighbors for query vectors (vec_id<10).
@@ -977,44 +1015,11 @@ object Similarity {
     // Scale shape: both legs end in bounded-heap top-20s (≤20 rows
     // per query per map task cross the shuffle), the fusion is a
     // |probes × ≤40|-row full-outer join, and the final top-5 is the
-    // same heap — after the two corpus passes (postings, vector
-    // scan), NOTHING is corpus-sized. Fuses c15+s01-class work in
-    // one query → Bench.Soloists at birth (the d16 composite rule).
-    "s18_hybrid_rrf" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id"), asDoubleVec(col("embedding")).as("v"))
-      val q = emb.filter(col("vec_id") % 101 === 0 && col("vec_id") < 5050)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val cosRanks = emb.filter(col("vec_id") % 101 =!= 0)
-        .crossJoin(broadcast(q))
-        .withColumn("cos", cosine(col("qv"), col("v")))
-        .groupBy("q_id")
-        .agg(graft.functions.TopKRows.topk(
-          struct((-col("cos")).as("ns"), col("vec_id").as("id")), 20).as("top"))
-        .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "e")))
-        .select(col("q_id"), col("e.id").as("doc_id"),
-          (col("pos") + 1).as("rk_cos"))
-      val bmRanks = Corpus.bm25Candidates(s, d)
-        .groupBy("q_id")
-        .agg(graft.functions.TopKRows.topk(
-          struct((-col("score")).as("ns"), col("doc_id").as("id")), 20).as("top"))
-        .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "e")))
-        .select(col("q_id"), col("e.id").as("doc_id"),
-          (col("pos") + 1).as("rk_bm"))
-      val fused = bmRanks
-        .join(cosRanks, Seq("q_id", "doc_id"), "full_outer")
-        .withColumn("rrf",
-          coalesce(lit(1.0) / (lit(60) + col("rk_bm")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("rk_cos")), lit(0.0)))
-      fused.groupBy("q_id")
-        .agg(graft.functions.TopKRows.topk(
-          struct((-col("rrf")).as("ns"), col("doc_id").as("id"),
-            col("rrf").as("r")), 5).as("top"))
-        .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "e")))
-        .select(col("q_id"), (col("pos") + 1).as("rk"),
-          col("e.id").as("doc_id"), round(col("e.r"), 6).as("rrf"))
-        .orderBy("q_id", "rk")
-    }),
+    // same heap — after the corpus passes (the BM25 stats aggregate
+    // and scoring projection, the vector scan), NOTHING is
+    // corpus-sized. Fuses c15+s01-class work in one query →
+    // Bench.Soloists at birth (the d16 composite rule).
+    "s18_hybrid_rrf" -> ((s, d) => hybridRrf(s, d, Corpus.bm25Candidates(s, d))),
 
     // s19: VALUE-LEVEL SIGN-LSH ORACLE TWIN (the d18/d19 convention,
     // extended to the vector side): s02's banding is un-oracle-able

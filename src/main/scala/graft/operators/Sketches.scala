@@ -134,18 +134,19 @@ object Sketches {
     // hash-exact against the oracle — and the within_ok gate pins the
     // sketch's error contract: an equi-width histogram's quantile
     // estimate (linear interpolation inside the covering bin) is off
-    // by at most one bin width. Shapes: one pass bins rows (bounds
-    // attach as a 1-row broadcast), two hash aggregates build+merge
-    // the shard histograms, and the 3-quantile × 64-bin probe is a
-    // bounded broadcast NLJ — nothing driver-side, nothing global but
-    // a 64-row cumulative window.
+    // by at most one bin width. Shapes: a 1-row aggregate (bounds, n
+    // and the reference quantiles) is collected; a second pass bins
+    // rows with those bounds as literals, and two hash aggregates
+    // build and merge the shard histograms, collected as ≤ 64 bins.
+    // The cumulative count, the bin pick and the interpolation run on
+    // the driver over those bins, the way StreamingSpec's micro-batch
+    // histogram fixes its bounds up front; Catalyst rounds the
+    // estimate and evaluates the gate over the 3-row local result,
+    // which is built in q order (no sort).
     "a07_histogram_quantiles" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
+      import s.implicits._
       val price = col("o_totalprice").cast(DecimalType(12, 2)).cast(DoubleType)
-      // fanned: both passes (GK sketch build, bin counting) are pure
-      // map-side CPU over the scan — on the tiny table's single split
-      // they ran one-core (1.9 s → 1.2 s at sf0.1)
-      val o = Tables.ordersFanned(s, d)
+      val o = Tables.orders(s, d)
         .select(price.as("x"), pmod(col("o_orderkey"), lit(8)).as("shard"))
       // The within_ok gate compares at ONE-BIN-WIDTH resolution, so
       // the reference quantiles use the distributed GK sketch
@@ -154,42 +155,37 @@ object Sketches {
       // 100 TB swap, applied here up front (the exact form measured
       // 4.9× at 10× rows; this leg is why).
       // NOTE (r14 advice): the GK merge is partition/ORDER sensitive,
-      // and ordersFanned changes the partitioning — reference
-      // quantiles can shift WITHIN a bin at other core counts or
-      // scales. The one-bin-width gate absorbs exactly that; if the
-      // gate ever tightens below a bin, derive the references from an
+      // so the reference quantiles can shift WITHIN a bin with the
+      // scan's split count (core count, scale, file layout). The
+      // one-bin-width gate absorbs exactly that; if the gate ever
+      // tightens below a bin, derive the references from an
       // order-insensitive pass (exact percentile over the binned
       // midpoints) instead.
-      val mm = o.agg(min(col("x")).as("mn"), max(col("x")).as("mx"),
-        count(lit(1)).as("n"),
-        percentile_approx(col("x"), lit(0.5), lit(10000)).as("p50"),
-        percentile_approx(col("x"), lit(0.9), lit(10000)).as("p90"),
-        percentile_approx(col("x"), lit(0.99), lit(10000)).as("p99"))
-      val merged = o.crossJoin(broadcast(mm.select(col("mn"), col("mx"))))
+      val mm = o.agg(min(col("x")), max(col("x")), count(lit(1)),
+        percentile_approx(col("x"), lit(0.5), lit(10000)),
+        percentile_approx(col("x"), lit(0.9), lit(10000)),
+        percentile_approx(col("x"), lit(0.99), lit(10000))).head()
+      val (mn, mx, n) = (mm.getDouble(0), mm.getDouble(1), mm.getLong(2))
+      val width = (mx - mn) / 64.0
+      val bins = o
         .withColumn("bin",
-          least(floor((col("x") - col("mn")) / ((col("mx") - col("mn")) / 64.0)),
+          least(floor((col("x") - lit(mn)) / ((lit(mx) - lit(mn)) / 64.0)),
             lit(63.0)).cast(LongType))
         .groupBy("shard", "bin").agg(count(lit(1)).as("cnt")) // shard sketches
         .groupBy("bin").agg(sum(col("cnt")).as("cnt"))        // the merge
-        .withColumn("cum", sum(col("cnt")).over(
-          Window.orderBy("bin") // 64 rows — bounded by construction
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      mm.select(explode(array(lit(0.5), lit(0.9), lit(0.99))).as("q"),
-          col("mn"), ((col("mx") - col("mn")) / 64.0).as("width"),
-          col("n"), col("p50"), col("p90"), col("p99"))
-        .withColumn("target", col("q") * col("n"))
-        .join(broadcast(merged), col("cum") >= col("target")) // ≤ 3×64 pairs
-        .groupBy("q", "mn", "width", "n", "target", "p50", "p90", "p99")
-        .agg(min(struct(col("bin"), col("cnt"), col("cum"))).as("b"))
-        .withColumn("est", round(col("mn") + col("width") *
-          (col("b.bin") + (col("target") - (col("b.cum") - col("b.cnt"))) /
-            col("b.cnt")), 6))
-        .withColumn("exact", when(col("q") === 0.5, col("p50"))
-          .when(col("q") === 0.9, col("p90")).otherwise(col("p99")))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1) // ≤ 64 bins
+      val cum = bins.scanLeft(0L)(_ + _._2).tail
+      // (q, its reference quantile's column in mm); cum ends at n ≥ q·n
+      Seq(0.5 -> 3, 0.9 -> 4, 0.99 -> 5).map { case (q, i) =>
+        val target = q * n
+        val k = cum.indexWhere(_ >= target)
+        val (bin, cnt) = bins(k)
+        (q, mn + width * (bin + (target - (cum(k) - cnt)) / cnt), mm.getDouble(i))
+      }.toDF("q", "raw_est", "exact")
+        .select(col("q"), round(col("raw_est"), 6).as("est"), col("exact"))
         .select(col("q"), col("est"),
-          when(abs(col("est") - col("exact")) <= col("width"), 1L)
+          when(abs(col("est") - col("exact")) <= lit(width), 1L)
             .otherwise(0L).as("within_ok"))
-        .orderBy("q")
     }),
 
     // a08: ROLLING-WINDOW DISTINCT via mergeable HLL partials — the

@@ -2069,7 +2069,11 @@ object SnapshotLog {
     // no footer opens, no data IO for the rest. The rollup runs over
     // the pruned read (so the oracle's full-table replay catches a
     // lost row the instant pruning is wrong); pruned_ok pins that
-    // pruning actually skipped files AND the plan covered all 8.
+    // pruning actually skipped files AND the plan covered all 8. The
+    // probe is the lowest eighth of the key span [lo, hi], read from
+    // the same manifest stats: [lo, lo + (hi − lo) / 8] in integer
+    // arithmetic, the oracle's rule too. A fixed range would cover
+    // every key of a small enough table and skip nothing.
     // At 100 TB: a point-range query on a 100k-file table goes from
     // 100k footer opens to a manifest already in hand — the Iceberg
     // min/max scan-planning path, and what the CDC layer's stats
@@ -2077,8 +2081,11 @@ object SnapshotLog {
     "i23_stats_pruned_scan" -> ((s, d) => {
       val table = statsPrunedOrdersTable(s, d)
       val cur = currentVersion(s, table)
-      val pruned = readAtPruned(s, table, cur, "o_orderkey", 1L, 2000L)
-        .filter(col("o_orderkey").between(1L, 2000L))
+      val spans = readManifest(s, table, cur).get.stats.values
+      val lo = spans.map(_._1).min
+      val hi = lo + (spans.map(_._2).max - lo) / 8
+      val pruned = readAtPruned(s, table, cur, "o_orderkey", lo, hi)
+        .filter(col("o_orderkey").between(lo, hi))
       val ok = lastPruneSkipped >= 1 &&
         lastPrunePlanned + lastPruneSkipped == 8
       statusRollup(pruned)
@@ -2498,15 +2505,19 @@ object SnapshotLog {
         CAST(1 AS BIGINT) AS wap_ok
       FROM all_rows GROUP BY 1 ORDER BY 1""",
 
-    // i23: the pruned scan must be exactly the full-table filter —
-    // a wrongly-skipped file loses rows and splits every checksum;
-    // pruned_ok is the pinned structural constant (files skipped,
-    // plan covered all 8)
+    // i23: the pruned scan must be exactly the full-table filter over
+    // the lowest eighth of the key span — a wrongly-skipped file loses
+    // rows and splits every checksum; pruned_ok is the pinned
+    // structural constant (files skipped, plan covered all 8)
     "i23_stats_pruned_scan" -> """
+      WITH span AS (
+        SELECT MIN(o_orderkey) AS lo,
+          MIN(o_orderkey) + (MAX(o_orderkey) - MIN(o_orderkey)) // 8 AS hi
+        FROM orders)
       SELECT o_orderstatus, COUNT(*) AS n_orders,
         CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS revenue,
         CAST(1 AS BIGINT) AS pruned_ok
-      FROM orders WHERE o_orderkey BETWEEN 1 AND 2000
+      FROM orders, span WHERE o_orderkey BETWEEN span.lo AND span.hi
       GROUP BY 1 ORDER BY 1""",
 
     // i25: the poison shard re-keys %97 clones but keeps their

@@ -23,8 +23,6 @@ class GlobalWindowSpec extends AnyFunSuite {
     * justification (shown on failure, kept next to the pin so the
     * whitelist can't grow silently). */
   private val allowed: Map[String, String] = Map(
-    "a07_histogram_quantiles" ->
-      "window over the merged 64-bin histogram vector — constant-sized sketch state, never rows",
     "c06_vocab_coverage" ->
       "cumulative coverage over the top-100 TakeOrderedAndProject result — a CONSTANT 100 rows reach the window (the vocab-sized aggregate is cut by limit(100) first)",
     "c13_domain_mixture" ->

@@ -11,9 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * registered surface falls back to an unbanded cartesian product.
   * Plans are built (not executed) for almost every query, so the
   * suite stays cheap; the exceptions are builders with an eager
-  * bounded training action (s09/s10's PCA fit, the LSH geometry
-  * count) whose cost is the a06 class — constant-size driver work,
-  * paid once per plan construction.
+  * bounded action (s09/s10's PCA fit, the LSH geometry count, c15's
+  * query-term and corpus-stats collects, a07's bounds and bins) whose
+  * cost is the a06 class — constant-size driver work, paid once per
+  * plan construction.
   */
 class PlanQualitySpec extends AnyFunSuite {
   lazy val s = TestSpark.spark
@@ -68,6 +69,22 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("minhash_signature("), s"d02 lost the native signature kernel:\n$p")
     assert(!p.contains("keys=[doc_id"), s"d02 aggregates on doc_id again:\n$p")
     assert(!p.contains("min("), s"d02 computes min aggregates again:\n$p")
+  }
+
+  test("c15 scores documents in one kernel projection; a07 bins with collected bounds") {
+    // c15's corpus stats and df reach the bm25_scores kernel as its
+    // model, and a07's bounds reach the binning pass as literals: no
+    // broadcast nested-loop join for a 1-row side, no global Window.
+    val c15 = plan("c15_bm25_topk")
+    assert(c15.contains("bm25_scores("), s"c15 lost the native BM25 kernel:\n$c15")
+    val a07 = plan("a07_histogram_quantiles")
+    // the 3-row result is a local relation built in q order: no range
+    // exchange and no sort for it
+    assert(!a07.contains("Exchange") && !a07.contains("Sort"), s"a07 sorts its result:\n$a07")
+    Seq("c15" -> c15, "a07" -> a07).foreach { case (q, p) =>
+      assert(!p.contains("Window"), s"$q plans a Window:\n$p")
+      assert(!p.contains("BroadcastNestedLoopJoin"), s"$q plans a nested-loop join:\n$p")
+    }
   }
 
   test("d08 bands on LSH buckets, never a label equi-join (the d05 scale bomb)") {
@@ -298,10 +315,6 @@ class PlanQualitySpec extends AnyFunSuite {
       // t09 class
       "t09_lm_quality_filter", "t11_quality_classifier",
       "a05_hll_union_bounds", "c06_vocab_coverage",
-      // c15 attaches the 1-row (n_docs, avgdl) corpus stats via
-      // explicit broadcast crossJoin — bounded by construction, the
-      // c06 class
-      "c15_bm25_topk",
       // s12 assigns IVF cells via crossJoin(broadcast(K centroids)) —
       // the s03/d13 class; s13 additionally scores the corpus against
       // crossJoin(broadcast(50 probe vectors)) — the s01 class — and
@@ -313,10 +326,6 @@ class PlanQualitySpec extends AnyFunSuite {
       // t13 attaches the 1-row corpus doc count via explicit broadcast
       // crossJoin — bounded by construction, the c06 class
       "t13_keyword_extract",
-      // a07 attaches 1-row histogram bounds (c06 class) and probes the
-      // 64-bin sketch with 3 quantiles via a non-equi broadcast join —
-      // ≤ 3×64 pairs, bounded by construction
-      "a07_histogram_quantiles",
       // s14 scans the corpus against crossJoin(broadcast(10 query
       // vectors)) — the s01 class; c17 attaches the 1-row corpus mean
       // via explicit broadcast crossJoin — the c06 class
@@ -352,9 +361,9 @@ class PlanQualitySpec extends AnyFunSuite {
       // a05 class
       "i25_ndv_stats",
       // s18's cosine leg scans the corpus against crossJoin(broadcast
-      // (≤50 probe vectors)) — the s01 class — and its BM25 leg rides
-      // c15's whitelisted 1-row corpus-stats crossJoin; s20's
-      // shortlist build is the same s01-class probe crossJoin
+      // (≤50 probe vectors)) — the s01 class; its BM25 leg is c15's
+      // join-free kernel projection. s20's shortlist build is the same
+      // s01-class probe crossJoin
       "s18_hybrid_rrf", "s20_mmr_diversify",
       // st07 attaches its 1-row late-kept/dropped accounting via
       // explicit broadcast crossJoin — bounded by construction, the
