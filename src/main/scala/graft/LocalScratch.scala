@@ -41,10 +41,11 @@ object LocalScratch {
     * `java.io.tmpdir`. Same rationale as [[conf]] — these are MB-scale
     * local fixtures whose WRITE time the bench measures inline, and the
     * sandbox device's intermittent write-throttle inflated exactly
-    * these queries 26–29× in BENCH_r07. /dev/shm persists across the
-    * bench's child JVMs, so the once-per-sfDir fixture caching keyed on
-    * source size+mtime keeps working. `SPARK_GRAFT_SCRATCH` overrides
-    * for an explicit location (e.g. a cluster's fast scratch mount). */
+    * these queries 26–29× (round 7; in git history). /dev/shm
+    * persists across the bench's child JVMs, so the once-per-sfDir
+    * fixture caching keyed on source size+mtime keeps working.
+    * `SPARK_GRAFT_SCRATCH` overrides for an explicit location (e.g. a
+    * cluster's fast scratch mount). */
   def scratchDir: String = sys.env.get("SPARK_GRAFT_SCRATCH").getOrElse {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite) {

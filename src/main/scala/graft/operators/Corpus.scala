@@ -164,7 +164,7 @@ object Corpus {
     "c03_dup_clusters" -> ((s, d) => {
       val edges = Dedup.ngramJaccardPairs(Tables.documents(s, d))
         .select(col("doc_a"), col("doc_b"))
-      connectedComponents(edges)
+      connectedComponents(edges).df
         .select(col("id").as("doc_id"), col("component")).orderBy("doc_id")
     }),
 
@@ -180,7 +180,7 @@ object Corpus {
     "c12_cluster_canonical" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val comp = connectedComponents(
-        Dedup.ngramJaccardPairs(docs).select(col("doc_a"), col("doc_b")))
+        Dedup.ngramJaccardPairs(docs).select(col("doc_a"), col("doc_b"))).df
       val w = Window.partitionBy("component")
         .orderBy(desc("text_len"), asc("doc_id"))
       docs.select(col("doc_id"), length(col("text")).cast(LongType).as("text_len"))
@@ -530,7 +530,7 @@ object Corpus {
       val edges = Dedup.ngramJaccardPairs(Tables.documents(s, d))
         .select(col("doc_a"), col("doc_b"))
         .truncatedLazy // components + the cross-split check read it
-      val comp = connectedComponents(edges)
+      val comp = connectedComponents(edges).df
       val assigned = Tables.documents(s, d).select(col("doc_id"))
         .join(comp.select(col("id").as("doc_id"), col("component")),
           Seq("doc_id"), "left_outer")
@@ -890,11 +890,9 @@ object Corpus {
       .distinct()
   }
 
-  /** Rounds the last [[connectedComponents]] call took — exposed for
-    * the CorpusSpec round-bound assertion (a path graph that plain
-    * min-label propagation crosses one hop per round must finish in
-    * O(log n) contraction rounds). Driver-side only; not operator state. */
-  @volatile private[graft] var lastCcRounds: Int = 0
+  /** Components as (id, component) rows, and the contraction rounds
+    * it took to reach them. */
+  final case class Components(df: DataFrame, rounds: Int)
 
   /** Connected components over an undirected edge list (doc_a, doc_b)
     * via ALTERNATING LARGE-STAR / SMALL-STAR contraction — the
@@ -918,8 +916,9 @@ object Corpus {
     * (edge sets are canonical big→small pairs, so equal fingerprints
     * ⇔ equal sets modulo a negligible 64-bit collision).
     *
-    * Returns (id, component) for every node that appears in an edge. */
-  def connectedComponents(edges: DataFrame): DataFrame = {
+    * Returns (id, component) for every node that appears in an edge,
+    * with the number of contraction rounds run. */
+  def connectedComponents(edges: DataFrame): Components = {
     // materialize before symmetrizing: `sym` references the edge
     // pipeline twice, and every contraction round re-reads it
     val canon = edges.select(col("doc_a"), col("doc_b")).truncated
@@ -982,10 +981,10 @@ object Corpus {
       next = fingerprint(e)
       rounds += 1
     }
-    lastCcRounds = rounds
-    nodes.join(e.select(col("u").as("id"), col("v").as("component")),
+    val comps = nodes.join(e.select(col("u").as("id"), col("v").as("component")),
         Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    Components(comps, rounds)
   }
 
   /** c11's DuckDB twin: the same 5 PageRank iterations unrolled as

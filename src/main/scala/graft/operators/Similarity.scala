@@ -43,12 +43,6 @@ object Similarity {
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
 
-  /** Cosine given precomputed norms — retained for callers that
-    * already carry norms; the one-pass native expression makes the
-    * precompute unnecessary, so this just delegates. */
-  def cosinePre(a: Column, b: Column, na: Column, nb: Column): Column =
-    cosine(a, b)
-
   /** float→double element widening as a plain array Cast — codegen'd
     * and exact, unlike a transform(_.cast) lambda which runs on the
     * interpreted HigherOrderFunction path (the eval family behind the

@@ -133,11 +133,9 @@ object SnapshotLog {
   // correctness anchor (SnapshotLogSpec pins agreement + read counts).
   // -----------------------------------------------------------------
 
-  /** Manifest reads spent by the last [[currentVersion]] call, and
-    * whether it fell back to the directory listing — exposed for the
-    * discovery-cost spec (observability, not state). */
-  @volatile private[graft] var lastVersionDiscoveryReads: Int = -1
-  @volatile private[graft] var lastVersionDiscoveryListed: Boolean = false
+  /** A discovered current version and what finding it cost: the
+    * manifests read, and whether it listed `_log`. */
+  final case class Discovery(version: Long, manifestReads: Int, listed: Boolean)
 
   private def ckptPath(table: String) =
     new org.apache.hadoop.fs.Path(s"${logDir(table)}/_last_checkpoint")
@@ -174,16 +172,20 @@ object SnapshotLog {
   /** Highest version with a VALID (end-sentinel-complete) manifest;
     * 0 when the table has no committed snapshot. Torn or garbage
     * version files are skipped — they are in-flight or failed
-    * commits, not table state.
+    * commits, not table state. [[discoverVersion]] returns the same
+    * version with what finding it cost. */
+  def currentVersion(s: SparkSession, table: String): Long =
+    discoverVersion(s, table).version
+
+  /** [[currentVersion]] with its cost: the manifests read and whether
+    * the directory listing ran.
     *
     * Fast path: verify the `_last_checkpoint` hint, then probe
     * forward (file-existence checks; squatter files are stepped over,
     * validity tracked separately) until the numbering runs out — no
     * directory listing, O(commits since the pointer) manifest reads.
-    * Fallback (no/torn/expired-past pointer): list `_log` and probe
-    * version numbers DESCENDING, returning the first valid manifest
-    * (first-valid-from-the-top ≡ max-over-valid). */
-  def currentVersion(s: SparkSession, table: String): Long = {
+    * Fallback (no/torn/expired-past pointer): [[currentVersionByListing]]. */
+  def discoverVersion(s: SparkSession, table: String): Discovery = {
     val fs = fsOf(s)
     readCkptHint(s, table) match {
       case Some(h) if readManifest(s, table, h).isDefined =>
@@ -195,29 +197,30 @@ object SnapshotLog {
           if (readManifest(s, table, probe).isDefined) best = probe
           probe += 1
         }
-        lastVersionDiscoveryReads = reads
-        lastVersionDiscoveryListed = false
-        best
+        Discovery(best, reads, listed = false)
       case _ => currentVersionByListing(s, table)
     }
   }
 
-  private[graft] def currentVersionByListing(s: SparkSession, table: String): Long = {
+  /** List `_log` and probe version numbers DESCENDING, returning the
+    * first valid manifest (first-valid-from-the-top ≡ max-over-valid)
+    * and the manifests read to find it. */
+  private[graft] def currentVersionByListing(s: SparkSession, table: String): Discovery = {
     val fs = fsOf(s)
-    lastVersionDiscoveryListed = true
-    lastVersionDiscoveryReads = 0
     val dir = new org.apache.hadoop.fs.Path(logDir(table))
-    if (!fs.exists(dir)) return 0L
-    fs.listStatus(dir).iterator
+    if (!fs.exists(dir)) return Discovery(0L, 0, listed = true)
+    var reads = 0
+    val v = fs.listStatus(dir).iterator
       .map(_.getPath.getName)
       .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))
       .map(_.drop(1).toLong)
       .toArray.sorted(Ordering[Long].reverse)
       .find { v =>
-        lastVersionDiscoveryReads += 1
+        reads += 1
         readManifest(s, table, v).isDefined
       }
       .getOrElse(0L)
+    Discovery(v, reads, listed = true)
   }
 
   /** Parse one manifest; None when absent or torn (no `end`). */
@@ -442,11 +445,9 @@ object SnapshotLog {
   // merge-on-read equality deletes (the Iceberg v2 delete-file route).
   // -----------------------------------------------------------------
 
-  /** Files planned / skipped by the last [[readAtPruned]] call —
-    * observability for the pruning spec and the i23 gate, mirroring
-    * [[lastVersionDiscoveryReads]]. */
-  @volatile private[graft] var lastPrunePlanned: Int = -1
-  @volatile private[graft] var lastPruneSkipped: Int = -1
+  /** A pruned snapshot read and the data files its plan kept
+    * (`planned`) and skipped by their manifest stats (`skipped`). */
+  final case class PrunedRead(df: DataFrame, planned: Int, skipped: Int)
 
   /** Per-file [min, max] of an integral column, for carrying in a
     * commit's `stats`. Since r15 the ranges come from the files'
@@ -575,19 +576,20 @@ object SnapshotLog {
     * still applies its own predicate; this only shrinks the file
     * list the scan plans over). At 100 TB this is the difference
     * between a point-range query opening 100k footers and opening
-    * exactly the handful of files whose range can match. */
+    * exactly the handful of files whose range can match.
+    *
+    * Returns the read with the counts of data files planned and
+    * skipped; the MOR-delete overlay's files count in neither. */
   def readAtPruned(s: SparkSession, table: String, v: Long, keyCol: String,
-      lo: Long, hi: Long): DataFrame = {
+      lo: Long, hi: Long): PrunedRead = {
     val m = readManifest(s, table, v).getOrElse(throw new IllegalArgumentException(
       s"no committed snapshot v$v in $table"))
     val kept = m.files.map(_._1).filter { p =>
       m.stats.get(p).forall { case (mn, mx) => mx >= lo && mn <= hi } }
-    lastPrunePlanned = kept.size
-    lastPruneSkipped = m.files.size - kept.size
     val base =
       if (kept.isEmpty) readAt(s, table, v).limit(0)
       else s.read.parquet(kept: _*)
-    overlayDeletes(s, m, base)
+    PrunedRead(overlayDeletes(s, m, base), kept.size, m.files.size - kept.size)
   }
 
   /** MOR-delete overlay for CONSUMER read paths that resolve a
@@ -2085,10 +2087,8 @@ object SnapshotLog {
       val lo = spans.map(_._1).min
       val hi = lo + (spans.map(_._2).max - lo) / 8
       val pruned = readAtPruned(s, table, cur, "o_orderkey", lo, hi)
-        .filter(col("o_orderkey").between(lo, hi))
-      val ok = lastPruneSkipped >= 1 &&
-        lastPrunePlanned + lastPruneSkipped == 8
-      statusRollup(pruned)
+      val ok = pruned.skipped >= 1 && pruned.planned + pruned.skipped == 8
+      statusRollup(pruned.df.filter(col("o_orderkey").between(lo, hi)))
         .withColumn("pruned_ok", lit(if (ok) 1L else 0L))
     }),
 
@@ -2139,13 +2139,11 @@ object SnapshotLog {
     // metadata path (why Delta ships `_last_checkpoint`).
     "i22_checkpointed_log" -> ((s, d) => {
       val table = checkpointedOrdersTable(s, d)
-      val viaCkpt = currentVersion(s, table)
-      val reads = lastVersionDiscoveryReads
-      val listed = lastVersionDiscoveryListed
-      val viaListing = currentVersionByListing(s, table)
-      val ok = !listed && reads <= 2 && viaCkpt == viaListing &&
-        viaCkpt == 11L
-      statusRollup(readAt(s, table, viaCkpt))
+      val viaCkpt = discoverVersion(s, table)
+      val viaListing = currentVersionByListing(s, table).version
+      val ok = !viaCkpt.listed && viaCkpt.manifestReads <= 2 &&
+        viaCkpt.version == viaListing && viaListing == 11L
+      statusRollup(readAt(s, table, viaCkpt.version))
         .withColumn("ckpt_ok", lit(if (ok) 1L else 0L))
     }),
     // i13: TIME TRAVEL — read AS OF v1 after v2 exists. The oracle is

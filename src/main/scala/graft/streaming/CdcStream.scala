@@ -82,10 +82,6 @@ object CdcStream {
   // inverted ranges are rejected at commit time by SnapshotLog.
   // -----------------------------------------------------------------
 
-  /** Scan files in the last apply's touched-file discovery — exposed
-    * for the pruning spec (driver-side observability, not state). */
-  @volatile private[graft] var lastDiscoveryScanFiles: Int = -1
-
   private def fsOf(s: SparkSession) =
     org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
 
@@ -131,10 +127,6 @@ object CdcStream {
   // retains.
   // -----------------------------------------------------------------
 
-  /** Manifest reads spent by the last idempotence probe — exposed for
-    * the O(1) spec (observability, not state). */
-  @volatile private[graft] var lastIdempotenceManifestReads: Int = -1
-
   private def txnPath(table: String, appId: String) = {
     require(appId.nonEmpty && appId.forall(c =>
       c.isLetterOrDigit || c == '-' || c == '_'),
@@ -176,29 +168,22 @@ object CdcStream {
     * sidecar's version — normally zero of them, a handful if
     * compactors committed in between. A missing/torn sidecar degrades
     * to the full-history probe (legacy tables, first batch), never to
-    * a wrong answer. */
+    * a wrong answer. Returns the answer with the number of manifests
+    * the probe read (version discovery not counted). */
   private def alreadyApplied(s: SparkSession, table: String, appId: String,
-      batchId: Long): Boolean = {
-    readTxn(s, table, appId) match {
-      case Some((lastId, lastVer)) =>
-        if (batchId <= lastId) { lastIdempotenceManifestReads = 0; true }
-        else {
-          val cur = SnapshotLog.currentVersion(s, table)
-          val probed = (lastVer + 1) to cur
-          lastIdempotenceManifestReads = probed.size
-          val hit = probed.find(v => SnapshotLog.readManifest(s, table, v)
-            .exists(_.op == opName(appId, batchId)))
-          hit.foreach(v => writeTxn(s, table, appId, batchId, v)) // heal
-          hit.isDefined
-        }
-      case None =>
-        val cur = SnapshotLog.currentVersion(s, table)
-        lastIdempotenceManifestReads = cur.toInt
-        val hit = (1L to cur).find(v => SnapshotLog.readManifest(s, table, v)
-          .exists(_.op == opName(appId, batchId)))
-        hit.foreach(v => writeTxn(s, table, appId, batchId, v)) // heal
-        hit.isDefined
+      batchId: Long): (Boolean, Int) = {
+    val from = readTxn(s, table, appId) match {
+      case Some((lastId, _)) if batchId <= lastId => return (true, 0)
+      case Some((_, lastVer)) => lastVer + 1
+      case None => 1L
     }
+    var reads = 0
+    val hit = (from to SnapshotLog.currentVersion(s, table)).find { v =>
+      reads += 1
+      SnapshotLog.readManifest(s, table, v).exists(_.op == opName(appId, batchId))
+    }
+    hit.foreach(v => writeTxn(s, table, appId, batchId, v)) // heal
+    (hit.isDefined, reads)
   }
 
   /** The mutation files among `entries` that contain one of the
@@ -260,13 +245,20 @@ object CdcStream {
         .map(r => r._1 -> r._3).toMap)
   }
 
+  /** What one [[applyBatch]] did: the committed `version` (-1 when
+    * the batch was already applied or empty), the manifests its
+    * idempotence probe read, and the data files its touched-file
+    * discovery key-scanned. */
+  final case class Applied(version: Long, probeReads: Int, scanFiles: Int)
+
   /** Apply one CDC micro-batch to the snapshot table. Idempotent on
     * `batchId` (monotonic per Structured Streaming checkpoint — the
     * Delta txn contract): a replayed batch (restart after a crash
     * between the sink commit and the checkpoint commit) is detected
     * by the txn sidecar — O(1) reads regardless of table history —
-    * and skipped. Returns the committed version, or -1 when the
-    * batch was already applied or empty.
+    * and skipped. Returns an [[Applied]]: the committed version, or
+    * -1 when the batch was already applied or empty, with the
+    * probe's manifest reads and the discovery's scan-file count.
     *
     * `evolveSchema = true` is the Delta `mergeSchema`/autoMerge MERGE
     * path: a batch carrying columns the target lacks WIDENS the table
@@ -278,11 +270,12 @@ object CdcStream {
     * unknown batch columns are dropped, the target schema is law. */
   def applyBatch(s: SparkSession, table: String, batch: DataFrame,
       batchId: Long, key: String, evolveSchema: Boolean = false,
-      appId: String = "cdc"): Long = {
-    if (alreadyApplied(s, table, appId, batchId)) return -1L
+      appId: String = "cdc"): Applied = {
+    val (applied, probeReads) = alreadyApplied(s, table, appId, batchId)
+    if (applied) return Applied(-1L, probeReads, 0)
     val latest = Upsert.latestOps(batch, key).cache()
     try {
-      if (latest.isEmpty) return -1L
+      if (latest.isEmpty) return Applied(-1L, probeReads, 0)
       val cur = SnapshotLog.currentVersion(s, table)
       val m = SnapshotLog.readManifest(s, table, cur).getOrElse(
         throw new IllegalStateException(s"CDC apply against unseeded $table"))
@@ -371,7 +364,6 @@ object CdcStream {
         }
         case _ => m.files.map(_._1)
       }
-      lastDiscoveryScanFiles = candidates.size
       // key-only explicit schema: the probe consumes nothing else, and
       // the inferring read would pay a schema job per batch
       val probeSchema = org.apache.spark.sql.types.StructType(
@@ -478,7 +470,7 @@ object CdcStream {
       // record the applied batchId IMMEDIATELY after the commit (the
       // idempotence guard)
       writeTxn(s, table, appId, batchId, v)
-      v
+      Applied(v, probeReads, candidates.size)
     } finally latest.unpersist()
   }
 
@@ -523,7 +515,7 @@ object CdcStream {
     * cross-stream ambiguity the appId exists to remove. */
   def deleteBatch(s: SparkSession, table: String, keys: DataFrame,
       batchId: Long, key: String, appId: String = "cdc-del"): Long = {
-    if (alreadyApplied(s, table, appId, batchId)) return -1L
+    if (alreadyApplied(s, table, appId, batchId)._1) return -1L
     val cur = SnapshotLog.currentVersion(s, table)
     val m = SnapshotLog.readManifest(s, table, cur).getOrElse(
       throw new IllegalStateException(s"MOR delete against unseeded $table"))
@@ -574,7 +566,7 @@ object CdcStream {
   def updateBatch(s: SparkSession, table: String, rows: DataFrame,
       batchId: Long, key: String, appId: String = "cdc-upd",
       orderBy: Seq[String] = Nil): Long = {
-    if (alreadyApplied(s, table, appId, batchId)) return -1L
+    if (alreadyApplied(s, table, appId, batchId)._1) return -1L
     val v = SnapshotLog.updateMorAs(s, table, rows, key,
       opName(appId, batchId), orderBy)
     writeTxn(s, table, appId, batchId, v)
@@ -598,7 +590,7 @@ object CdcStream {
     * returns the committed version or -1 when already applied. */
   def patchBatch(s: SparkSession, table: String, rows: DataFrame,
       batchId: Long, key: String, appId: String = "cdc-patch"): Long = {
-    if (alreadyApplied(s, table, appId, batchId)) return -1L
+    if (alreadyApplied(s, table, appId, batchId)._1) return -1L
     val v = SnapshotLog.patchMor(s, table, rows, key, opName(appId, batchId))
     writeTxn(s, table, appId, batchId, v)
     v

@@ -66,16 +66,16 @@ class CorpusSpec extends AnyFunSuite {
     // so propagation needs ~255 rounds (or ~128 driver probes with the
     // old double-step). Large-star/small-star contracts it in O(log n).
     val path = (0L until 255L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val comp = Corpus.connectedComponents(path).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cc = Corpus.connectedComponents(path)
+    val comp = cc.df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.size === 256)
     assert(comp.values.forall(_ == 0L), "single path component, min id 0")
-    assert(Corpus.lastCcRounds <= 12,
-      s"contraction took ${Corpus.lastCcRounds} rounds — not logarithmic")
+    assert(cc.rounds >= 1 && cc.rounds <= 12,
+      s"contraction reported ${cc.rounds} rounds, wanted 1..12 (logarithmic)")
     // two disjoint components stay disjoint
     val two = ((0L until 10L).map(i => (i, i + 1)) ++
       (100L until 110L).map(i => (i, i + 1))).toDF("doc_a", "doc_b")
-    val c2 = Corpus.connectedComponents(two).collect()
+    val c2 = Corpus.connectedComponents(two).df.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L to 10L).forall(c2(_) == 0L) && (100L to 110L).forall(c2(_) == 100L))
   }

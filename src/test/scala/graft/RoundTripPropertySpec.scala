@@ -108,7 +108,7 @@ class RoundTripPropertySpec extends AnyFunSuite {
       val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
       val minOf = nodes.groupBy(find).map { case (r, ns) => r -> ns.min }
       val want = nodes.map(n => n -> minOf(find(n))).toMap
-      val got = Corpus.connectedComponents(edges.toDF("doc_a", "doc_b"))
+      val got = Corpus.connectedComponents(edges.toDF("doc_a", "doc_b")).df
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === want, s"components diverge on ${edges.take(10)}…")
     }

@@ -291,36 +291,38 @@ class SnapshotLogSpec extends AnyFunSuite {
     (0 until 6).foreach(tag => seed(table, tag))
     // fast path: pointer current after the last commit → exactly ONE
     // manifest read (verify the hint) + one existence miss, no listing
-    assert(SnapshotLog.currentVersion(s, table) === 6L)
-    assert(!SnapshotLog.lastVersionDiscoveryListed,
-      "pointer path fell back to the directory listing")
-    assert(SnapshotLog.lastVersionDiscoveryReads === 1,
-      s"discovery read ${SnapshotLog.lastVersionDiscoveryReads} manifests, wanted 1")
-    assert(SnapshotLog.currentVersionByListing(s, table) === 6L)
+    val fast = SnapshotLog.discoverVersion(s, table)
+    assert(fast.version === 6L)
+    assert(!fast.listed, "pointer path fell back to the directory listing")
+    assert(fast.manifestReads === 1,
+      s"discovery read ${fast.manifestReads} manifests, wanted 1")
+    assert(SnapshotLog.currentVersionByListing(s, table).version === 6L)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       s.sparkContext.hadoopConfiguration)
     val ptr = new org.apache.hadoop.fs.Path(s"$table/_log/_last_checkpoint")
     // stale pointer (commits landed after it): forward probe catches up
     val out1 = fs.create(ptr, true)
     try out1.write("3\nend".getBytes("UTF-8")) finally out1.close()
-    assert(SnapshotLog.currentVersion(s, table) === 6L,
-      "stale pointer was not probed forward")
-    assert(!SnapshotLog.lastVersionDiscoveryListed)
+    val stale = SnapshotLog.discoverVersion(s, table)
+    assert(stale.version === 6L, "stale pointer was not probed forward")
+    assert(!stale.listed)
     // torn pointer: fall back to the listing, same answer
     val out2 = fs.create(ptr, true)
     try out2.write("6".getBytes("UTF-8")) finally out2.close()
-    assert(SnapshotLog.currentVersion(s, table) === 6L)
-    assert(SnapshotLog.lastVersionDiscoveryListed,
-      "torn pointer did not fall back to the listing")
+    val torn = SnapshotLog.discoverVersion(s, table)
+    assert(torn.version === 6L)
+    assert(torn.listed, "torn pointer did not fall back to the listing")
     // missing pointer: listing fallback again
     fs.delete(ptr, false)
-    assert(SnapshotLog.currentVersion(s, table) === 6L)
-    assert(SnapshotLog.lastVersionDiscoveryListed)
+    val missing = SnapshotLog.discoverVersion(s, table)
+    assert(missing.version === 6L)
+    assert(missing.listed)
     // next commit restores the fast path
     seed(table, 6)
-    assert(SnapshotLog.currentVersion(s, table) === 7L)
-    assert(!SnapshotLog.lastVersionDiscoveryListed)
-    assert(SnapshotLog.lastVersionDiscoveryReads === 1)
+    val restored = SnapshotLog.discoverVersion(s, table)
+    assert(restored.version === 7L)
+    assert(!restored.listed)
+    assert(restored.manifestReads === 1)
   }
 
   test("checkpoint pointer: expire re-anchors it (a pointer at an expired " +
@@ -328,10 +330,10 @@ class SnapshotLogSpec extends AnyFunSuite {
     val table = freshTable()
     (0 until 5).foreach(tag => seed(table, tag))
     SnapshotLog.expire(s, table, keepLast = 2) // retains v4, v5
-    assert(SnapshotLog.currentVersion(s, table) === 5L)
-    assert(!SnapshotLog.lastVersionDiscoveryListed,
-      "pointer was not re-anchored after expire")
-    assert(SnapshotLog.lastVersionDiscoveryReads === 1)
+    val found = SnapshotLog.discoverVersion(s, table)
+    assert(found.version === 5L)
+    assert(!found.listed, "pointer was not re-anchored after expire")
+    assert(found.manifestReads === 1)
     // and the content at the surviving versions is untouched
     assert(SnapshotLog.readAt(s, table, 5L).count() ===
       Tables.orders(s, d).filter(col("o_orderkey") % 7 === 4).count())
@@ -351,10 +353,10 @@ class SnapshotLogSpec extends AnyFunSuite {
     assert(SnapshotLog.readManifest(s, table, v).get.stats === stats)
     // pruned ≡ full under the same predicate, and files were skipped
     val lo = 1L; val hi = 500L
-    val pruned = SnapshotLog.readAtPruned(s, table, v, "o_orderkey", lo, hi)
-      .filter(col("o_orderkey").between(lo, hi))
-    assert(SnapshotLog.lastPruneSkipped >= 1, "no file was pruned")
-    assert(SnapshotLog.lastPrunePlanned + SnapshotLog.lastPruneSkipped === 8)
+    val read = SnapshotLog.readAtPruned(s, table, v, "o_orderkey", lo, hi)
+    val pruned = read.df.filter(col("o_orderkey").between(lo, hi))
+    assert(read.skipped >= 1, "no file was pruned")
+    assert(read.planned + read.skipped === 8)
     val full = SnapshotLog.readAt(s, table, v)
       .filter(col("o_orderkey").between(lo, hi))
     assert(pruned.count() === full.count())
@@ -362,9 +364,9 @@ class SnapshotLogSpec extends AnyFunSuite {
     // a commit WITHOUT stats keeps every file (stats are an
     // accelerator, never a requirement)
     val v2 = SnapshotLog.commit(s, table, "restats", files, Some(v))
-    SnapshotLog.readAtPruned(s, table, v2, "o_orderkey", lo, hi)
-    assert(SnapshotLog.lastPruneSkipped === 0)
-    assert(SnapshotLog.lastPrunePlanned === 8)
+    val unpruned = SnapshotLog.readAtPruned(s, table, v2, "o_orderkey", lo, hi)
+    assert(unpruned.skipped === 0)
+    assert(unpruned.planned === 8)
   }
 
   test("footer-derived fileStats ≡ the scan's, including null keys, " +
@@ -981,8 +983,9 @@ class SnapshotLogSpec extends AnyFunSuite {
       base.filter(col("o_orderkey") % 5 === 0).select("o_orderkey"),
       "o_orderkey")
     // the pruned read both prunes AND masks deleted rows
-    val pruned = SnapshotLog.readAtPruned(s, table, v2, "o_orderkey", 1L, 500L)
-    assert(SnapshotLog.lastPruneSkipped >= 1, "stats pruning stopped biting")
+    val read = SnapshotLog.readAtPruned(s, table, v2, "o_orderkey", 1L, 500L)
+    val pruned = read.df
+    assert(read.skipped >= 1, "stats pruning stopped biting")
     assert(pruned.filter(col("o_orderkey") % 5 === 0).count() === 0L,
       "pruned read resurrected MOR-deleted rows")
     assert(pruned.filter(col("o_orderkey").between(1L, 500L)).count() ===

@@ -466,7 +466,7 @@ class StreamingSpec extends AnyFunSuite {
     // and the batchId-idempotence layer holds even when a batch IS
     // replayed past the checkpoint (crash-between-sink-and-checkpoint)
     val replay = CdcStream.applyBatch(s, table,
-      ops.filter(pmod(col("o_orderkey"), lit(3)) === 0), 0L, "o_orderkey")
+      ops.filter(pmod(col("o_orderkey"), lit(3)) === 0), 0L, "o_orderkey").version
     assert(replay === -1L, "replayed batch was applied twice")
     assert(SnapshotLog.currentVersion(s, table) === vAfterFirst)
   }
@@ -521,7 +521,7 @@ class StreamingSpec extends AnyFunSuite {
     CdcStream.seedTarget(s, table, Tables.orders(s, d))
     val deleteAll = Tables.orders(s, d)
       .withColumn("op", lit("D")).withColumn("ts", lit(1))
-    val v = CdcStream.applyBatch(s, table, deleteAll, 0L, "o_orderkey")
+    val v = CdcStream.applyBatch(s, table, deleteAll, 0L, "o_orderkey").version
     assert(v === 2L)
     // the rewrite of an all-deleted table must still commit >=1 data
     // file (schema carrier) so the snapshot stays readable at 0 rows
@@ -549,7 +549,7 @@ class StreamingSpec extends AnyFunSuite {
     val lowKeys = Tables.orders(s, d).orderBy("o_orderkey").limit(5)
       .withColumn("op", lit("U")).withColumn("ts", lit(1))
       .withColumn("o_orderpriority", lit("T-TOUCH"))
-    val v2 = CdcStream.applyBatch(s, table, lowKeys, 0L, "o_orderkey")
+    val v2 = CdcStream.applyBatch(s, table, lowKeys, 0L, "o_orderkey").version
     assert(v2 === 2L)
     val m2 = SnapshotLog.readManifest(s, table, 2L).get
     val carried = m1.files.toSet.intersect(m2.files.toSet)
@@ -579,10 +579,8 @@ class StreamingSpec extends AnyFunSuite {
     val lowKeys = Tables.orders(s, d).orderBy("o_orderkey").limit(5)
       .withColumn("op", lit("U")).withColumn("ts", lit(1))
       .withColumn("o_orderpriority", lit("P-PRUNE"))
-    CdcStream.applyBatch(s, tA, lowKeys, 0L, "o_orderkey")
-    val pruned = CdcStream.lastDiscoveryScanFiles
-    CdcStream.applyBatch(s, tB, lowKeys, 0L, "o_orderkey")
-    val full = CdcStream.lastDiscoveryScanFiles
+    val pruned = CdcStream.applyBatch(s, tA, lowKeys, 0L, "o_orderkey").scanFiles
+    val full = CdcStream.applyBatch(s, tB, lowKeys, 0L, "o_orderkey").scanFiles
     assert(full === 4, s"statless path should scan all 4 files, scanned $full")
     assert(pruned < full && pruned >= 1,
       s"stats failed to prune: scanned $pruned of $full files")
@@ -596,8 +594,7 @@ class StreamingSpec extends AnyFunSuite {
     val low2 = Tables.orders(s, d).orderBy("o_orderkey").limit(3)
       .withColumn("op", lit("U")).withColumn("ts", lit(2))
       .withColumn("o_orderpriority", lit("P-HEAL"))
-    CdcStream.applyBatch(s, tB, low2, 1L, "o_orderkey")
-    assert(CdcStream.lastDiscoveryScanFiles < 4,
+    assert(CdcStream.applyBatch(s, tB, low2, 1L, "o_orderkey").scanFiles < 4,
       "healed stats did not prune the follow-up batch")
   }
 
@@ -612,22 +609,23 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.CdcStream
     val table = java.nio.file.Files.createTempDirectory("graft_cdc_txn").toString
     CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
-    assert(CdcStream.applyBatch(s, table, cdcTouch(0, 1), 0L, "o_orderkey") === 2L)
-    assert(CdcStream.applyBatch(s, table, cdcTouch(1, 2), 1L, "o_orderkey") === 3L)
+    assert(CdcStream.applyBatch(s, table, cdcTouch(0, 1), 0L, "o_orderkey").version === 2L)
+    assert(CdcStream.applyBatch(s, table, cdcTouch(1, 2), 1L, "o_orderkey").version === 3L)
     // steady state: the probe reads ZERO manifests — the txn sidecar
     // answers alone, regardless of how long the table history grows
-    assert(CdcStream.applyBatch(s, table, cdcTouch(2, 3), 2L, "o_orderkey") === 4L)
-    assert(CdcStream.lastIdempotenceManifestReads === 0,
-      s"fresh batch probe read ${CdcStream.lastIdempotenceManifestReads} manifests")
-    assert(CdcStream.applyBatch(s, table, cdcTouch(0, 1), 0L, "o_orderkey") === -1L,
-      "replayed batch was applied twice")
-    assert(CdcStream.lastIdempotenceManifestReads === 0,
-      s"replay probe read ${CdcStream.lastIdempotenceManifestReads} manifests")
+    val fresh = CdcStream.applyBatch(s, table, cdcTouch(2, 3), 2L, "o_orderkey")
+    assert(fresh.version === 4L)
+    assert(fresh.probeReads === 0,
+      s"fresh batch probe read ${fresh.probeReads} manifests")
+    val replay = CdcStream.applyBatch(s, table, cdcTouch(0, 1), 0L, "o_orderkey")
+    assert(replay.version === -1L, "replayed batch was applied twice")
+    assert(replay.probeReads === 0,
+      s"replay probe read ${replay.probeReads} manifests")
     // expiring history must NOT break the replay guard (the manifest-
     // op-string probe silently did: the expired cdc-batch-0 manifest
     // took the evidence with it)
     SnapshotLog.expire(s, table, keepLast = 1)
-    assert(CdcStream.applyBatch(s, table, cdcTouch(0, 1), 0L, "o_orderkey") === -1L,
+    assert(CdcStream.applyBatch(s, table, cdcTouch(0, 1), 0L, "o_orderkey").version === -1L,
       "replayed batch re-applied after expire")
     // stats ride the manifest, so expire reclaims them with the
     // manifests — no per-version sidecar files exist to leak
@@ -645,8 +643,8 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.CdcStream
     val table = java.nio.file.Files.createTempDirectory("graft_cdc_heal").toString
     CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
-    assert(CdcStream.applyBatch(s, table, cdcTouch(0, 1), 0L, "o_orderkey") === 2L)
-    assert(CdcStream.applyBatch(s, table, cdcTouch(1, 2), 1L, "o_orderkey") === 3L)
+    assert(CdcStream.applyBatch(s, table, cdcTouch(0, 1), 0L, "o_orderkey").version === 2L)
+    assert(CdcStream.applyBatch(s, table, cdcTouch(1, 2), 1L, "o_orderkey").version === 3L)
     // simulate the crash: rewind the sidecar to batch 0's state (as if
     // batch 1's commit landed but the process died before writeTxn)
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -657,12 +655,14 @@ class StreamingSpec extends AnyFunSuite {
     try out.write("0\t2\nend".getBytes("UTF-8")) finally out.close()
     // the replay of batch 1 probes ONLY the manifests newer than the
     // sidecar's version (v3 — one read), finds its op, and skips
-    assert(CdcStream.applyBatch(s, table, cdcTouch(1, 2), 1L, "o_orderkey") === -1L)
-    assert(CdcStream.lastIdempotenceManifestReads === 1,
-      s"heal probe read ${CdcStream.lastIdempotenceManifestReads} manifests, wanted 1")
+    val healing = CdcStream.applyBatch(s, table, cdcTouch(1, 2), 1L, "o_orderkey")
+    assert(healing.version === -1L)
+    assert(healing.probeReads === 1,
+      s"heal probe read ${healing.probeReads} manifests, wanted 1")
     // and the probe healed the sidecar: the next replay is O(0) again
-    assert(CdcStream.applyBatch(s, table, cdcTouch(1, 2), 1L, "o_orderkey") === -1L)
-    assert(CdcStream.lastIdempotenceManifestReads === 0)
+    val healed = CdcStream.applyBatch(s, table, cdcTouch(1, 2), 1L, "o_orderkey")
+    assert(healed.version === -1L)
+    assert(healed.probeReads === 0)
   }
 
   test("stats cannot tear separately from their commit: inverted ranges " +
@@ -689,8 +689,9 @@ class StreamingSpec extends AnyFunSuite {
     val lowKeys = Tables.orders(s, d).orderBy("o_orderkey").limit(5)
       .withColumn("op", lit("U")).withColumn("ts", lit(1))
       .withColumn("o_orderpriority", lit("T-TORN"))
-    assert(CdcStream.applyBatch(s, table, lowKeys, 0L, "o_orderkey") === 3L)
-    assert(CdcStream.lastDiscoveryScanFiles === 4,
+    val statless = CdcStream.applyBatch(s, table, lowKeys, 0L, "o_orderkey")
+    assert(statless.version === 3L)
+    assert(statless.scanFiles === 4,
       "stats-less manifest did not fall back to the full scan")
     val got = SnapshotLog.readAt(s, table, 3L)
     assert(got.count() === Tables.orders(s, d).count())
@@ -699,8 +700,7 @@ class StreamingSpec extends AnyFunSuite {
     val low2 = Tables.orders(s, d).orderBy("o_orderkey").limit(3)
       .withColumn("op", lit("U")).withColumn("ts", lit(2))
       .withColumn("o_orderpriority", lit("T-HEAL"))
-    CdcStream.applyBatch(s, table, low2, 1L, "o_orderkey")
-    assert(CdcStream.lastDiscoveryScanFiles < 4,
+    assert(CdcStream.applyBatch(s, table, low2, 1L, "o_orderkey").scanFiles < 4,
       "healed stats did not prune the follow-up batch")
   }
 
@@ -717,13 +717,13 @@ class StreamingSpec extends AnyFunSuite {
         lit(null).cast(org.apache.spark.sql.types.LongType))
       .withColumn("op", lit("I")).withColumn("ts", lit(1))
       .withColumn("o_orderpriority", lit("N-NULL"))
-    val v = CdcStream.applyBatch(s, table,
+    val applied = CdcStream.applyBatch(s, table,
       updates.unionByName(nullIns), 0L, "o_orderkey")
-    assert(v === 2L)
+    assert(applied.version === 2L)
     // null keys join nothing: the insert appends, the updates land,
     // and the stats path neither NPEs nor loses its pruning (nulls
     // are excluded from the probe set, not poisoning it)
-    assert(CdcStream.lastDiscoveryScanFiles < 4,
+    assert(applied.scanFiles < 4,
       "null key in the batch disabled stats pruning")
     val got = SnapshotLog.readAt(s, table, 2L)
     assert(got.count() === Tables.orders(s, d).count() + 1)
@@ -748,7 +748,7 @@ class StreamingSpec extends AnyFunSuite {
     val b0 = orders.filter(col("o_orderkey") % 13 === 1)
       .withColumn("o_orderpriority", lit("1-ILV"))
       .withColumn("op", lit("U")).withColumn("ts", lit(1))
-    val v = CdcStream.applyBatch(s, table, b0, 0L, "o_orderkey")
+    val v = CdcStream.applyBatch(s, table, b0, 0L, "o_orderkey").version
     assert(v === 3L, "shared txn state made the upsert skip the delete's batchId")
     val m = SnapshotLog.readManifest(s, table, v).get
     // the pending delete survived the upsert commit (carried, not
@@ -782,7 +782,7 @@ class StreamingSpec extends AnyFunSuite {
       .orderBy("o_orderkey").limit(5)
       .withColumn("o_orderpriority", lit("2-BACK"))
       .withColumn("op", lit("I")).withColumn("ts", lit(2))
-    val v2 = CdcStream.applyBatch(s, table, back, 1L, "o_orderkey")
+    val v2 = CdcStream.applyBatch(s, table, back, 1L, "o_orderkey").version
     val mor2 = SnapshotLog.readMor(s, table, v2, "o_orderkey")
     assert(mor2.filter(col("o_orderpriority") === "2-BACK").count() === 5L,
       "a carried delete masked the batch's fresh insert")
@@ -791,7 +791,7 @@ class StreamingSpec extends AnyFunSuite {
         && col("o_orderkey") % 13 === 1).count())
     // both streams stay independently idempotent
     assert(CdcStream.deleteBatch(s, table, doomed, 0L, "o_orderkey") === -1L)
-    assert(CdcStream.applyBatch(s, table, back, 1L, "o_orderkey") === -1L)
+    assert(CdcStream.applyBatch(s, table, back, 1L, "o_orderkey").version === -1L)
   }
 
   test("persisted schema: an evolveSchema widen survives later strict " +
@@ -815,7 +815,7 @@ class StreamingSpec extends AnyFunSuite {
     val b1 = orders.filter(col("o_orderkey") % 17 === 0)
       .withColumn("o_orderpriority", lit("3-STRICT"))
       .withColumn("op", lit("U")).withColumn("ts", lit(2))
-    val v1 = CdcStream.applyBatch(s, table, b1, 1L, "o_orderkey")
+    val v1 = CdcStream.applyBatch(s, table, b1, 1L, "o_orderkey").version
     val got = SnapshotLog.readAt(s, table, v1, mergeSchema = true)
     assert(got.columns.contains("o_channel"))
     // %23 keys keep WEB unless batch 1 replaced them (%391 = 17·23 →
@@ -830,7 +830,7 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("o_orderpriority", lit("4-EVOLVE-NOCOL"))
       .withColumn("op", lit("U")).withColumn("ts", lit(3))
     val v2 = CdcStream.applyBatch(s, table, b2, 2L, "o_orderkey",
-      evolveSchema = true)
+      evolveSchema = true).version
     assert(v2 > v1)
     assert(SnapshotLog.readAt(s, table, v2, mergeSchema = true)
       .filter(col("o_channel") === "WEB").count() ===
