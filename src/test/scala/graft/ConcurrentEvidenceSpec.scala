@@ -1,9 +1,11 @@
 package graft
 
-import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, CyclicBarrier, Executors, TimeUnit}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.sources.SnapshotLog
 import graft.streaming.CdcStream
 
@@ -22,6 +24,16 @@ class ConcurrentEvidenceSpec extends AnyFunSuite {
   private def run(sx: SparkSession, query: String): Seq[String] =
     rows(SparkEntry.queries(query)(sx, d))
 
+  /** Table directories this spec made, deleted when each test ends. */
+  private val made = new ConcurrentLinkedQueue[String]()
+
+  private def cleaned(body: => Unit): Unit =
+    try body finally {
+      val fs = FileSystem.get(s.sparkContext.hadoopConfiguration)
+      made.asScala.foreach(t => fs.delete(new Path(t), true))
+      made.clear()
+    }
+
   /** i22 and i23 with the evidence their gates read. */
   private def snapshotSide(sx: SparkSession) = {
     val i22 = run(sx, "i22_checkpointed_log")
@@ -37,8 +49,14 @@ class ConcurrentEvidenceSpec extends AnyFunSuite {
   /** u04 and the evidence of three CDC batches plus a replay on a
     * fresh table. */
   private def cdcSide(sx: SparkSession) = {
-    val u04 = run(sx, "u04_cdc_stream_apply")
+    val u04df = SparkEntry.queries("u04_cdc_stream_apply")(sx, d)
+    // u04 seeds a fresh table of its own; the files its result reads name it
+    u04df.inputFiles.flatMap(f => Iterator.iterate(new Path(f))(_.getParent)
+      .takeWhile(_ != null).find(_.getName.startsWith("graft_u04_table")))
+      .distinct.foreach(t => made.add(t.toString))
+    val u04 = rows(u04df)
     val table = java.nio.file.Files.createTempDirectory("graft_cdc_conc").toString
+    made.add(table)
     CdcStream.seedTarget(sx, table, Tables.orders(sx, d), "o_orderkey")
     def batch(i: Int) = Tables.orders(sx, d).orderBy("o_orderkey").limit(3)
       .withColumn("op", lit("U")).withColumn("ts", lit(i + 1))
@@ -50,7 +68,7 @@ class ConcurrentEvidenceSpec extends AnyFunSuite {
   }
 
   test("i22 + i23 in one session and u04 in another, started together, " +
-      "equal their solo runs in output and evidence") {
+      "equal their solo runs in output and evidence") (cleaned {
     val sa = s.newSession()
     val sb = s.newSession()
     val soloA = snapshotSide(sa)
@@ -70,12 +88,15 @@ class ConcurrentEvidenceSpec extends AnyFunSuite {
       assert(a.get(10, TimeUnit.MINUTES) === soloA)
       assert(b.get(10, TimeUnit.MINUTES) === soloB)
     } finally pool.shutdownNow()
-  }
+    assert(made.asScala.count(_.contains("graft_u04_table")) === 2,
+      "u04's tables were not found for cleanup")
+  })
 
   test("a pruned read's counts describe its own table after another " +
-      "table's pruned read") {
+      "table's pruned read") (cleaned {
     def layout(tag: String, withStats: Boolean): String = {
       val table = java.nio.file.Files.createTempDirectory(s"graft_prune_$tag").toString
+      made.add(table)
       val dir = s"$table/data/base"
       Tables.orders(s, d).repartitionByRange(8, col("o_orderkey"))
         .write.mode("overwrite").parquet(dir)
@@ -94,5 +115,5 @@ class ConcurrentEvidenceSpec extends AnyFunSuite {
     assert(a.planned + a.skipped === 8)
     // A's counts still match the files its read actually plans
     assert(a.df.inputFiles.length === a.planned)
-  }
+  })
 }

@@ -9,28 +9,31 @@ import scala.jdk.CollectionConverters._
   * session on the JVM, so evidence parked there can be overwritten by
   * another session between the operator call and the read — and when
   * a query gates a column on it, the query result changes too. The
-  * scan flags every `@volatile` and every `var` declared directly in
-  * an `object` body; comments and string literals are blanked first. */
+  * scan is line-based: a `var` declaration belongs to the nearest
+  * line above it that is indented less, and is flagged when that line
+  * opens an `object`. */
 class ModuleStateSpec extends AnyFunSuite {
-  import ModuleStateSpec.offenders
 
-  test("the scanner flags object-body vars and @volatile, nothing nested deeper") {
-    val src =
-      """object A { @volatile private[graft] var x = 0 }
-        |object B extends Serializable {
-        |  var y = 1
-        |  def f: Int = { var i = 0; i += 1; i }
-        |  class C { var z = 0 }
-        |  val s = "object D { var w = 0 }" // object E { var v }
-        |  val c = '{'
-        |}
-        |class F { var u = 0 }
-        |case object G { /* var t */ private var q: Long = 0L }
-        |""".stripMargin
-    assert(offenders(src).map(_._1).distinct === Seq(1, 3, 10))
+  private val varDecl = """^(\s*)(?:\w+(?:\[\w+\])?\s+)*var\s""".r
+  private val objectHeader = """^\s*(?:\w+\s+)*object\s""".r
+
+  /** (line number, line) of each `@volatile` and object-body `var`. */
+  private def offenders(lines: Seq[String]): Seq[(Int, String)] = {
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    def code(l: String) = l.trim.nonEmpty && !l.trim.matches("""(//|/\*|\*).*""")
+    lines.indices.collect {
+      case i if lines(i).contains("@volatile") => (i + 1, lines(i).trim)
+      case i if varDecl.findFirstIn(lines(i)).nonEmpty &&
+          lines.take(i).reverseIterator.filter(code)
+            .find(indent(_) < indent(lines(i)))
+            .exists(objectHeader.findFirstIn(_).nonEmpty) => (i + 1, lines(i).trim)
+    }
   }
 
   test("src/main declares no @volatile and no var in an object body") {
+    // rot guard: the scan must still see the shape it exists to catch
+    assert(offenders(Seq("object A extends B {", "  // c", "  private[graft] var x = 0",
+      "  def f = { var i = 0; i }", "}")).map(_._1) === Seq(3))
     val root = java.nio.file.Paths.get("src/main")
     assert(java.nio.file.Files.isDirectory(root),
       s"source tree not found at ${root.toAbsolutePath} — run tests from the repo root")
@@ -39,107 +42,11 @@ class ModuleStateSpec extends AnyFunSuite {
     assert(files.size > 20, s"scan saw only ${files.size} source files")
     val found = for {
       f <- files
-      (line, text) <- offenders(
-        new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+      (line, text) <- offenders(java.nio.file.Files.readAllLines(f).asScala.toSeq)
     } yield s"  $f:$line: $text"
     assert(found.isEmpty,
       "module-level mutable state in src/main — return the operator's " +
         "evidence with its result (a case class next to the DataFrame) " +
         "instead of parking it in a shared variable:\n" + found.mkString("\n"))
-  }
-}
-
-object ModuleStateSpec {
-  /** `src` with comments and string/char literals blanked to spaces
-    * (newlines kept, so every offset and line still matches). Code
-    * spliced into an interpolated string (`s"${...}"`) is lexed as
-    * code, so a splice that spans lines cannot unbalance the braces. */
-  private def blanked(src: String): String = {
-    val out = src.toCharArray
-    def blank(from: Int, until: Int): Unit =
-      for (k <- from until math.min(until, src.length) if out(k) != '\n') out(k) = ' '
-    def endOf(token: String, from: Int): Int = {
-      val e = src.indexOf(token, from)
-      if (e < 0) src.length else e + token.length
-    }
-    /** Code from `start` to the end, or past the `}` that closes a
-      * splice; returns where it stopped. */
-    def code(start: Int, splice: Boolean): Int = {
-      var i = start
-      var depth = 0
-      while (i < src.length) {
-        val c = src(i)
-        val next =
-          if (src.startsWith("//", i)) {
-            val e = src.indexOf('\n', i)
-            if (e < 0) src.length else e
-          }
-          else if (src.startsWith("/*", i)) endOf("*/", i + 2)
-          else if (c == '\'' && i + 2 < src.length && src(i + 1) == '\\') endOf("'", i + 3)
-          else if (c == '\'' && i + 2 < src.length && src(i + 2) == '\'') i + 3
-          else -1
-        if (next >= 0) { blank(i, next); i = next }
-        else if (c == '"') i = string(i, interp = i > 0 && src(i - 1).isLetterOrDigit)
-        else if (splice && c == '}' && depth == 0) { blank(i, i + 1); return i + 1 }
-        else {
-          if (c == '{') depth += 1 else if (c == '}') depth -= 1
-          i += 1
-        }
-      }
-      i
-    }
-    def string(start: Int, interp: Boolean): Int = {
-      val close = if (src.startsWith("\"\"\"", start)) "\"\"\"" else "\""
-      var i = start + close.length
-      blank(start, i)
-      while (i < src.length && !src.startsWith(close, i)) {
-        if (close == "\"" && src(i) == '\\') { blank(i, i + 2); i += 2 }
-        else if (interp && src.startsWith("$$", i)) { blank(i, i + 2); i += 2 }
-        else if (interp && src.startsWith("${", i)) { blank(i, i + 2); i = code(i + 2, splice = true) }
-        else { blank(i, i + 1); i += 1 }
-      }
-      while (close.length == 3 && i + 3 < src.length && src(i + 3) == '"') i += 1
-      blank(i, i + close.length)
-      i + close.length
-    }
-    code(0, splice = false)
-    new String(out)
-  }
-
-  /** The header before `{` opens an `object` body when `object` is its
-    * last definition keyword (`object X extends Y with Z {`). */
-  private val keyword =
-    """\b(object|class|trait|def|val|var|new|if|else|while|for|match|try|catch|finally|do|yield)\b|=>|=""".r
-
-  /** (line, source line) of each `@volatile` and each `var` declared
-    * directly in an `object` body. */
-  def offenders(src: String): Seq[(Int, String)] = {
-    val code = blanked(src)
-    val inObject = new Array[Boolean](code.length)
-    var frames = List.empty[Boolean]
-    var header = 0
-    for (i <- code.indices) {
-      code(i) match {
-        case '{' =>
-          frames = keyword.findAllIn(code.substring(header, i)).toSeq
-            .lastOption.contains("object") :: frames
-          header = i + 1
-        case '}' =>
-          require(frames.nonEmpty, s"unbalanced '}' at offset $i")
-          frames = frames.tail; header = i + 1
-        case ';' => header = i + 1
-        case _ =>
-      }
-      inObject(i) = frames.headOption.contains(true)
-    }
-    require(frames.isEmpty, "unbalanced '{' — the scan lost track of the source")
-    val lines = src.split("\n", -1)
-    def at(offset: Int): (Int, String) = {
-      val n = code.substring(0, offset).count(_ == '\n')
-      (n + 1, lines(n).trim)
-    }
-    ("@volatile".r.findAllMatchIn(code).map(m => at(m.start)) ++
-      """\bvar\b""".r.findAllMatchIn(code).filter(m => inObject(m.start))
-        .map(m => at(m.start))).toSeq.sortBy(_._1)
   }
 }

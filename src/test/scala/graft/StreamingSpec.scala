@@ -580,7 +580,9 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("op", lit("U")).withColumn("ts", lit(1))
       .withColumn("o_orderpriority", lit("P-PRUNE"))
     val pruned = CdcStream.applyBatch(s, tA, lowKeys, 0L, "o_orderkey").scanFiles
-    val full = CdcStream.applyBatch(s, tB, lowKeys, 0L, "o_orderkey").scanFiles
+    val fullApply = CdcStream.applyBatch(s, tB, lowKeys, 0L, "o_orderkey")
+    val full = fullApply.scanFiles
+    assert(fullApply.version === 2L)
     assert(full === 4, s"statless path should scan all 4 files, scanned $full")
     assert(pruned < full && pruned >= 1,
       s"stats failed to prune: scanned $pruned of $full files")
@@ -594,8 +596,10 @@ class StreamingSpec extends AnyFunSuite {
     val low2 = Tables.orders(s, d).orderBy("o_orderkey").limit(3)
       .withColumn("op", lit("U")).withColumn("ts", lit(2))
       .withColumn("o_orderpriority", lit("P-HEAL"))
-    assert(CdcStream.applyBatch(s, tB, low2, 1L, "o_orderkey").scanFiles < 4,
-      "healed stats did not prune the follow-up batch")
+    val healed = CdcStream.applyBatch(s, tB, low2, 1L, "o_orderkey")
+    assert(healed.version === 3L, "follow-up batch was not committed")
+    assert(healed.scanFiles >= 1 && healed.scanFiles < 4,
+      s"healed stats did not prune the follow-up batch: scanned ${healed.scanFiles}")
   }
 
   private def cdcTouch(i: Int, ts: Int) =
@@ -700,8 +704,10 @@ class StreamingSpec extends AnyFunSuite {
     val low2 = Tables.orders(s, d).orderBy("o_orderkey").limit(3)
       .withColumn("op", lit("U")).withColumn("ts", lit(2))
       .withColumn("o_orderpriority", lit("T-HEAL"))
-    assert(CdcStream.applyBatch(s, table, low2, 1L, "o_orderkey").scanFiles < 4,
-      "healed stats did not prune the follow-up batch")
+    val healed = CdcStream.applyBatch(s, table, low2, 1L, "o_orderkey")
+    assert(healed.version === 4L, "follow-up batch was not committed")
+    assert(healed.scanFiles >= 1 && healed.scanFiles < 4,
+      s"healed stats did not prune the follow-up batch: scanned ${healed.scanFiles}")
   }
 
   test("CDC batch with null keys applies cleanly and keeps pruning") {
@@ -723,7 +729,7 @@ class StreamingSpec extends AnyFunSuite {
     // null keys join nothing: the insert appends, the updates land,
     // and the stats path neither NPEs nor loses its pruning (nulls
     // are excluded from the probe set, not poisoning it)
-    assert(applied.scanFiles < 4,
+    assert(applied.scanFiles >= 1 && applied.scanFiles < 4,
       "null key in the batch disabled stats pruning")
     val got = SnapshotLog.readAt(s, table, 2L)
     assert(got.count() === Tables.orders(s, d).count() + 1)
