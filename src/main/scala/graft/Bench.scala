@@ -129,19 +129,13 @@ object Bench {
     // heavier than the whole rest of the m family combined, the
     // d04/t06/t15 explode class, seated at birth per the r10 rule
     "s18_hybrid_rrf", "m08_cdc_chunking",
-    // round-14 (r13 verdict item 2): s20 was the suite's single most
-    // expensive query while NOT seated — 6.75 s with a 15.55 s worst
-    // in-family draw (2.3×) vs 4.08 s fresh-JVM solo best-of-3
-    // (draws 6.31/5.03/4.08 at sf0.1); it builds an s01-class
-    // probe-scan shortlist AND unrolls the greedy MMR re-rank over
-    // it, the composite/JIT-lottery profile of every prior sweep
-    // victim (s13/d16/t15); s21 re-runs exact s01 inside its recall
-    // gate — the s17/s04 queries("...")-composite class, seated at
-    // birth per the r10 rule (BenchSoloistSpec enforces); m09 runs
-    // the whole m08 per-byte-position chunker AND lands two
-    // SnapshotLog tables inside its timing — the m08 explode class
-    // plus write-path weight, seated at birth
-    "s20_mmr_diversify", "s21_ann_rebalance", "m09_chunk_store",
+    // round-14: s21 re-runs exact s01 inside its recall gate — the
+    // s17/s04 queries("...")-composite class, seated at birth per the
+    // r10 rule (BenchSoloistSpec enforces); m09 runs the whole m08
+    // per-byte-position chunker AND lands two SnapshotLog tables
+    // inside its timing — the m08 explode class plus write-path
+    // weight, seated at birth
+    "s21_ann_rebalance", "m09_chunk_store",
     // round-14 optimization: with the t17 BPE-result memo removed
     // (every invocation must compute from the parquet inputs), t10
     // and t17 each run the full 10-round iterative trainer — 10

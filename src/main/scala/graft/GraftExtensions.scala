@@ -16,7 +16,9 @@ import graft.plans.RangeJoinBinning
   *     `spark.graft.rangeJoin.binSeconds`; a no-op otherwise).
   *   - `cosine_sim(array<double>, array<double>)` — the native
   *     codegen'd [[graft.functions.CosineSimilarity]] expression,
-  *     callable from SQL text, not just the Column API.
+  *     callable from SQL text, not just the Column API; array<float>
+  *     arguments (the embeddings column) are implicitly widened. This
+  *     is the library's only registration of the function.
   *
   * This is tier (c) of SURVEY §7.1's extension ladder (compose →
   * Expression → plan rule), used exactly where built-ins genuinely

@@ -54,4 +54,22 @@ object LocalScratch {
       d.getPath
     } else sys.props.getOrElse("java.io.tmpdir", "/tmp")
   }
+
+  private lazy val localFs =
+    org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+
+  /** A fresh directory `<scratchDir>/<prefix><random>` for a table that
+    * lives no longer than this JVM: the query tables of u04–u11,
+    * i28–i30 and m09, and the tables the test suites make. Hadoop's
+    * `deleteOnExit` removes it with its contents when the local
+    * FileSystem closes at shutdown, after the SparkContext has stopped,
+    * so runs no longer pile tables up in RAM-backed scratch. The
+    * once-per-sfDir fixtures are not made here: they are reused on
+    * purpose. */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(scratchDir), prefix)
+    localFs.deleteOnExit(new org.apache.hadoop.fs.Path(dir.toUri))
+    dir.toString
+  }
 }

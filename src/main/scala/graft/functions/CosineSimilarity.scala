@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -13,8 +12,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * vector distance, and the composable form
   * `aggregate(zip_with(a,b,*))/...` runs as three interpreted
   * higher-order folds per row — measured ~6× slower on the similarity
-  * hot paths. This expression whole-stage-codegens: the generated Java
-  * loop below is inlined into the surrounding stage.
+  * hot paths. The loop is [[CosineSimilarity.cosine]], compiled once by
+  * scalac: interpreted evaluation calls it, generated code is a single
+  * call into it, and s20's driver-side MMR greedy calls it on the
+  * collected shortlist, so every cosine graft computes comes from the
+  * same loop. Inputs are implicitly cast to array<double>, so the
+  * embeddings' array<float> is accepted (the widening is exact).
   *
   * Numeric contract: accumulation is strictly left-to-right, then
   * dot / (sqrt(na) * sqrt(nb)) — bit-identical to both the
@@ -24,25 +27,34 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * contract (embeddings are dense fixed-dim vectors).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ImplicitCastInputTypes {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<double> arguments, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"${CosineSimilarity.JavaName}.cosine($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  val info: ExpressionInfo = new ExpressionInfo(
+    classOf[CosineSimilarity].getName, "cosine_sim")
+
+  /** The companion class's name: scalac puts a static forwarder for
+    * [[cosine]] on it, which is what generated Java calls. */
+  private val JavaName = classOf[CosineSimilarity].getName
+
+  /** The cosine of `x` and `y` over their common prefix. */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -53,31 +65,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb"); val i = ctx.freshName("i")
-      val n = ctx.freshName("n"); val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = $a.getDouble($i);
-         |  double $yi = $b.getDouble($i);
-         |  $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[CosineSimilarity].getName, "cosine_sim")
 }

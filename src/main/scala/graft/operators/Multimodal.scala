@@ -354,12 +354,8 @@ object Multimodal {
     // integers+digests, and reconstruction shuffles each doc's own
     // chunks only.
     "m09_chunk_store" -> ((s, d) => {
-      val storeT = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.LocalScratch.scratchDir),
-        "graft_m09_store").toString
-      val refsT = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.LocalScratch.scratchDir),
-        "graft_m09_refs").toString
+      val storeT = graft.LocalScratch.tempDir("graft_m09_store")
+      val refsT = graft.LocalScratch.tempDir("graft_m09_refs")
       import graft.sources.SnapshotLog
       val chunks = cdcChunks(s, d).truncatedLazy // store, refs, stats legs
       chunks.select(col("digest"), col("chunk")).groupBy("digest")

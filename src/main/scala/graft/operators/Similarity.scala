@@ -3,8 +3,11 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.functions.CosineSimilarity
 import graft.Checkpoint.TruncateOps
 
 /** Similarity search over the `embeddings` fixture (vec_id,
@@ -1078,18 +1081,19 @@ object Similarity {
     // the de-dup step of every production retrieval stack): greedily
     // pick 5 of the top-20 shortlist maximizing
     // 0.7·relevance − 0.3·max-similarity-to-already-picked, so near-
-    // duplicate hits stop crowding out coverage. Determinism: rel and
-    // pairwise sims are the same raw cosines both engines compute
-    // bit-identically (the s01 precedent), the greedy argmax
-    // tie-breaks on doc_id, and only the OUTPUT rounds — every
-    // intermediate comparison sees identical doubles. Scale shape:
-    // one corpus scan builds the per-query top-20 heap; the pair
-    // relation is |queries| × 20² rows; the greedy is k=5 UNROLLED
-    // bounded joins (≤20 rows per query each) — after the scan,
-    // nothing is corpus-sized. The selection loop that looks
-    // inherently sequential is sequential only in k (a constant),
-    // never in the data.
+    // duplicate hits stop crowding out coverage. Scale shape: one
+    // corpus scan builds the per-query top-20 heap; after it the
+    // state is bounded, |queries| × 20 rows of one vector each
+    // (≤ 200 at vec_id < 10), so the shortlist is collected and
+    // the greedy runs per query on the driver ([[mmrPicks]]), the
+    // a07/c15 precedent. Determinism: rel is the shortlist's cosine,
+    // and the pairwise sims come from the same loop
+    // (CosineSimilarity.cosine) that the native expression and both
+    // engines' cosines agree with bit for bit; ties go to the smaller
+    // doc_id; only the output rounds, in Catalyst, over the local
+    // result built in (q_id, rk) order (no sort).
     "s20_mmr_diversify" -> ((s, d) => {
+      import s.implicits._
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), asDoubleVec(col("embedding")).as("v"))
       val q = emb.filter(col("vec_id") < 10)
@@ -1104,50 +1108,14 @@ object Similarity {
         .select(col("q_id"), explode(col("tk")).as("e"))
         .select(col("q_id"), col("e.id").as("doc_id"), col("e.r").as("rel"))
         .join(emb.withColumnRenamed("vec_id", "doc_id"), Seq("doc_id"))
-        .truncatedLazy // shortlist feeds the pair build + 5 greedy steps
-      val pair = short.select(col("q_id"), col("doc_id").as("a"), col("v").as("va"))
-        .join(short.select(col("q_id"), col("doc_id").as("b"), col("v").as("vb")),
-          Seq("q_id"))
-        .filter(col("a") =!= col("b"))
-        .withColumn("sim", cosine(col("va"), col("vb")))
-        .select("q_id", "a", "b", "sim")
-        .truncatedLazy // reused by 4 of the 5 steps
-      // greedy argmax with (score desc, doc_id asc) tie-break via
-      // max(struct(score, -doc))
-      def argmax(cand: DataFrame, score: Column): DataFrame =
-        cand.withColumn("__sc", score)
-          .groupBy("q_id")
-          .agg(max(struct(col("__sc"), (-col("doc_id")).as("nd"))).as("w"))
-          .select(col("q_id"), (-col("w.nd")).as("doc_id"),
-            col("w.__sc").as("score"))
-      // EVERY step is lineage-cut: step k's `selected` references all
-      // earlier steps, and each earlier step references the ones before
-      // it — un-truncated, the executed plan embeds ~2^k argmax
-      // subtrees (s1 alone re-ran 16 times; the explained plan was
-      // 509 KB with 644 Exchanges). The cut keeps each ≤10-row step a
-      // shared LogicalRDD computed once; lazy, so the blocks pin inside
-      // the final action's own job — no dedicated per-step job.
-      val s1 = argmax(short.select(col("q_id"), col("doc_id"), col("rel")),
-        col("rel")).truncatedLazy
-      val steps = (2 to 5).foldLeft(Seq(s1)) { (acc, _) =>
-        val selected = acc.map(_.select(col("q_id"), col("doc_id")))
-          .reduce(_.unionByName(_))
-        val ms = pair
-          .join(selected.select(col("q_id"), col("doc_id").as("b")),
-            Seq("q_id", "b"))
-          .groupBy(col("q_id"), col("a").as("doc_id"))
-          .agg(max(col("sim")).as("ms"))
-          .select(col("q_id"), col("doc_id"), col("ms"))
-        val cand = short.select(col("q_id"), col("doc_id"), col("rel"))
-          .join(selected, Seq("q_id", "doc_id"), "left_anti")
-          .join(ms, Seq("q_id", "doc_id"))
-        acc :+ argmax(cand, col("rel") * 0.7 - col("ms") * 0.3).truncatedLazy
-      }
-      steps.zipWithIndex.map { case (df, i) =>
-        df.select(col("q_id"), lit(i + 1).as("rk"), col("doc_id"),
-          round(col("score"), 6).as("score")) }
-        .reduce(_.unionByName(_))
-        .orderBy("q_id", "rk")
+        .select("q_id", "doc_id", "rel", "v")
+        .collect()
+      short.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (qId, rows) =>
+        mmrPicks(rows.toSeq.map(r => (r.getLong(1), r.getDouble(2),
+          UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](3).toArray))), 5)
+          .zipWithIndex.map { case ((doc, score), i) => (qId, i + 1, doc, score) }
+      }.toDF("q_id", "rk", "doc_id", "raw")
+        .select(col("q_id"), col("rk"), col("doc_id"), round(col("raw"), 6).as("score"))
     })
   )
 
@@ -1157,6 +1125,28 @@ object Similarity {
     * so "the sampling rule" is a single edit site. */
   private def trainSample(df: DataFrame): DataFrame =
     df.filter(pmod(xxhash64(col("vec_id")), lit(4)) === 0)
+
+  /** s20's greedy MMR over one query's shortlist of (doc_id, rel, v):
+    * step 1 takes the top rel, each later step the top
+    * rel·0.7 − ms·0.3, where ms is the candidate's max cosine to the
+    * rows already picked; ties go to the smaller doc_id. Returns up to
+    * `k` (doc_id, score) picks in pick order. */
+  private[graft] def mmrPicks(cands: Seq[(Long, Double, ArrayData)],
+                              k: Int): Seq[(Long, Double)] = {
+    val picks = scala.collection.mutable.ArrayBuffer.empty[((Long, Double, ArrayData), Double)]
+    def score(c: (Long, Double, ArrayData)): Double =
+      if (picks.isEmpty) c._2
+      else c._2 * 0.7 - picks.map(p => CosineSimilarity.cosine(c._3, p._1._3))
+        .reduce(math.max(_, _)) * 0.3
+    var left = cands
+    while (picks.size < k && left.nonEmpty) {
+      val best = left.map(c => (c, score(c))).reduce((a, b) =>
+        if (b._2 > a._2 || (b._2 == a._2 && b._1._1 < a._1._1)) b else a)
+      picks += best
+      left = left.filterNot(_._1 == best._1._1)
+    }
+    picks.map { case ((doc, _, _), sc) => (doc, sc) }.toSeq
+  }
 
   /** The two-phase ANN tail shared by s07/s09: bounded-heap top-n
     * shortlist per query on an APPROXIMATE score, then exact cosine

@@ -626,13 +626,13 @@ object TextAnalysis {
 
     // t17: ITERATIVE BPE TRAINER (r13 verdict item 5) — the real
     // Sennrich loop, not one round's statistic: 10 unrolled merge
-    // rounds (the s20 constant-N greedy precedent), each taking the
+    // rounds (a constant N, never data-sized), each taking the
     // weighted argmax adjacent-symbol pair over the Heaps-bounded
     // distinct-word table, rewriting every word's symbol sequence,
     // and recounting — t12 is exactly round 1's pair table; this is
     // the trainer that PRODUCES a merge list (and t10 now applies
     // it). Output: the 10 merges in training order with their counts.
-    // See [[trainBpe]] for the shape and the cross-engine rewrite
+    // See [[bpeMerges]] for the shape and the cross-engine rewrite
     // convention; the DuckDB oracle replays all 10 rounds as an
     // unrolled CTE chain (the t10 recursive-CTE convention), argmax
     // and rewrite re-derived independently in SQL.
@@ -642,15 +642,6 @@ object TextAnalysis {
         .orderBy("merge_rank")
     })
   )
-
-  /** 10-round BPE training per call — t17 emits it, t10 applies it.
-    * Deliberately NOT memoized: a module-level result cache keyed on
-    * the fixture dir would make repeat bench draws (and any second
-    * caller in one JVM) measure a map lookup instead of the
-    * computation — every invocation must compute from the parquet
-    * inputs. */
-  private[graft] def bpeMerges(s: SparkSession, d: String): Seq[(Long, String, Long)] =
-    trainBpe(s, d)
 
   /** The 10-round iterative BPE merge loop (Sennrich et al. 2016,
     * arXiv:1508.07909 — the algorithm every LLM tokenizer pipeline
@@ -672,8 +663,14 @@ object TextAnalysis {
     * `.truncated` keeps the 10-round plan flat instead of 60 nested
     * replaces deep. At 100 TB the pair table and rewrite shuffle the
     * vocabulary, not the corpus: the corpus is scanned ONCE to build
-    * word counts. */
-  private def trainBpe(s: SparkSession, d: String): Seq[(Long, String, Long)] = {
+    * word counts.
+    *
+    * t17 emits the merges, t10 applies them. Deliberately NOT
+    * memoized: a module-level result cache keyed on the fixture dir
+    * would make repeat bench draws (and any second caller in one JVM)
+    * measure a map lookup instead of the computation — every
+    * invocation must compute from the parquet inputs. */
+  private def bpeMerges(s: SparkSession, d: String): Seq[(Long, String, Long)] = {
     import graft.Checkpoint.TruncateOps
     val wn = Tables.documents(s, d)
       .select(explode(split(lower(col("text")), "\\s+")).as("word"))
@@ -794,7 +791,7 @@ object TextAnalysis {
       s"(length(text) - length(replace(text, '$m', '')))").mkString(" + ")
     // t17's unrolled replay: 10 rounds of (adjacent-pair count →
     // argmax → 6-pass padded-string rewrite), each round its own CTE
-    // trio (p/b/s), re-deriving in SQL exactly what trainBpe computes
+    // trio (p/b/s), re-deriving in SQL exactly what bpeMerges computes
     // — the argmax is data-dependent, so the oracle computes it too
     // rather than receiving literals. Assumes `wn(word, n)` in scope.
     val bpeChain: String = {

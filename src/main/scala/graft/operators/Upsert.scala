@@ -195,9 +195,7 @@ object Upsert {
       // fresh table per run (CDC apply mutates), on the tmpfs scratch:
       // the bench measures the write+commit cycle inline and the
       // sandbox block device write-throttles (LocalScratch scaladoc)
-      val table = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.LocalScratch.scratchDir),
-        "graft_u04_table").toString
+      val table = graft.LocalScratch.tempDir("graft_u04_table")
       graft.streaming.CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
       val ops = cdcOpsLog(s, d)
       (0 until 3).foreach { i =>
@@ -226,9 +224,7 @@ object Upsert {
     // moves a count).
     "u05_gdpr_erase" -> ((s, d) => {
       import graft.sources.SnapshotLog
-      val table = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.LocalScratch.scratchDir),
-        "graft_u05_table").toString
+      val table = graft.LocalScratch.tempDir("graft_u05_table")
       graft.streaming.CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
       val erase = Tables.orders(s, d)
         .filter(col("o_custkey") % 50 === 0)
@@ -265,9 +261,7 @@ object Upsert {
     // wider projection — evolution adds zero data-proportional cost.
     "u07_evolving_merge" -> ((s, d) => {
       import graft.sources.SnapshotLog
-      val table = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.LocalScratch.scratchDir),
-        "graft_u07_table").toString
+      val table = graft.LocalScratch.tempDir("graft_u07_table")
       graft.streaming.CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
       val orders = Tables.orders(s, d)
       def chanOf(k: org.apache.spark.sql.Column) =
@@ -324,9 +318,7 @@ object Upsert {
     // + manifest, not a scan-and-rewrite of every touched file.
     "u08_mor_delete" -> ((s, d) => {
       import graft.sources.SnapshotLog
-      val table = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.LocalScratch.scratchDir),
-        "graft_u08_table").toString
+      val table = graft.LocalScratch.tempDir("graft_u08_table")
       graft.streaming.CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
       val orders = Tables.orders(s, d)
       SnapshotLog.deleteMor(s, table,
@@ -363,9 +355,7 @@ object Upsert {
     // rewrites files on every batch.
     "u09_mor_delete_stream" -> ((s, d) => {
       import graft.sources.SnapshotLog
-      val table = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.LocalScratch.scratchDir),
-        "graft_u09_table").toString
+      val table = graft.LocalScratch.tempDir("graft_u09_table")
       graft.streaming.CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
       val doomed = Tables.orders(s, d)
         .filter(col("o_orderkey") % 21 === 0).select("o_orderkey")
@@ -406,9 +396,7 @@ object Upsert {
     // the maintenance-cadence compaction.
     "u10_mor_update" -> ((s, d) => {
       import graft.sources.SnapshotLog
-      val table = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.LocalScratch.scratchDir),
-        "graft_u10_table").toString
+      val table = graft.LocalScratch.tempDir("graft_u10_table")
       graft.streaming.CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
       val orders = Tables.orders(s, d)
       def reshape(df: DataFrame, st: String, dp: Double, pri: String) =
@@ -474,9 +462,7 @@ object Upsert {
     // is one broadcast join per patched column until compaction.
     "u11_patch_columns" -> ((s, d) => {
       import graft.sources.SnapshotLog
-      val table = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.LocalScratch.scratchDir),
-        "graft_u11_table").toString
+      val table = graft.LocalScratch.tempDir("graft_u11_table")
       val orders = Tables.orders(s, d)
       val base = orders.select(col("o_orderkey"), col("o_custkey"),
         col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),

@@ -2343,9 +2343,7 @@ object SnapshotLog {
     // writer races and a bounded table footprint — without the grace
     // window ever deleting a live writer's pre-commit files.
     "i28_orphan_cleanup" -> ((s, d) => {
-      val table = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.LocalScratch.scratchDir),
-        "graft_i28_table").toString
+      val table = graft.LocalScratch.tempDir("graft_i28_table")
       graft.streaming.CdcStream.seedTarget(s, table, Tables.orders(s, d))
       // the loser writer: data landed, commit never did
       Tables.orders(s, d).filter(col("o_orderkey") % 97 === 0)
@@ -2397,9 +2395,7 @@ object SnapshotLog {
     // audit pipeline runs against it with every existing writer
     // unchanged, and merge-back is O(1) metadata.
     "i29_branch_writes" -> ((s, d) => {
-      val table = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.LocalScratch.scratchDir),
-        "graft_i29_table").toString
+      val table = graft.LocalScratch.tempDir("graft_i29_table")
       graft.streaming.CdcStream.seedTarget(s, table, Tables.orders(s, d),
         "o_orderkey")
       val orders = Tables.orders(s, d)
@@ -2443,9 +2439,7 @@ object SnapshotLog {
     // over manifest ranges and the merge is one manifest write — no
     // data IO at any table size.
     "i30_branch_merge" -> ((s, d) => {
-      val table = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.LocalScratch.scratchDir),
-        "graft_i30_table").toString
+      val table = graft.LocalScratch.tempDir("graft_i30_table")
       graft.streaming.CdcStream.seedTarget(s, table, Tables.orders(s, d),
         "o_orderkey")
       val orders = Tables.orders(s, d)

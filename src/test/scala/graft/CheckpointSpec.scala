@@ -13,7 +13,7 @@ class CheckpointSpec extends AnyFunSuite {
   private val d = TestSpark.sf0001
 
   test("c03/c11 are hash-identical under reliable checkpointing, and files land in the dir") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = LocalScratch.tempDir("graft_ckpt")
     def run(name: String) =
       SparkEntry.queries(name)(s, d).collect().map(_.toString).toSeq
     val localC03 = run("c03_dup_clusters")
@@ -33,7 +33,7 @@ class CheckpointSpec extends AnyFunSuite {
     // its separate write job (Checkpoint scaladoc); the fallback makes
     // the reliable variant eager, so the returned frame's RDD must
     // already be checkpointed BEFORE any caller action runs.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_lazy").toString
+    val dir = LocalScratch.tempDir("graft_ckpt_lazy")
     s.conf.set(Checkpoint.DirConf, dir)
     try {
       import s.implicits._

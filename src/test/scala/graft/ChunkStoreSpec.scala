@@ -20,7 +20,7 @@ class ChunkStoreSpec extends AnyFunSuite {
     import graft.sources.SnapshotLog
     val fs = org.apache.hadoop.fs.FileSystem.get(
       s.sparkContext.hadoopConfiguration)
-    val table = java.nio.file.Files.createTempDirectory("graft_m09_life").toString
+    val table = LocalScratch.tempDir("graft_m09_life")
     val chunks = graft.operators.Multimodal.cdcChunks(s, d)
       .persist()
     try {

@@ -113,8 +113,7 @@ class LakeMaintenanceSpec extends AnyFunSuite {
     val layout = LakeMaintenance.zorderedOrders(s, d)
     val idx = s.read.parquet(LakeMaintenance.zoneMapIndex(s, d))
     // a day's "append": a slim slice of orders written as fresh files
-    val shardDir = java.nio.file.Files
-      .createTempDirectory("graft_zm_shard").toString
+    val shardDir = LocalScratch.tempDir("graft_zm_shard")
     Tables.orders(s, d).filter(col("o_orderkey") % 101 === 0)
       .repartition(2).write.mode("overwrite").parquet(shardDir)
     // incremental: stats over ONLY the shard files, unioned onto the

@@ -130,7 +130,7 @@ class RelationalSinkSpec extends AnyFunSuite {
       "duckdb_jdbc jar absent from the offline cache")
     import org.apache.spark.sql.functions._
     val spark = TestSpark.spark
-    val db = java.nio.file.Files.createTempDirectory("graft_duck").resolve("live.db")
+    val db = java.nio.file.Paths.get(graft.LocalScratch.tempDir("graft_duck")).resolve("live.db")
     val url = s"jdbc:duckdb:$db"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.duckdb.DuckDBDriver")

@@ -21,7 +21,7 @@ class RoundTripPropertySpec extends AnyFunSuite {
     val gen = Gen.listOfN(20, Gen.zip(Gen.choose(0L, 1000L), Gen.alphaStr))
     samples(gen, 3).foreach { rows =>
       val df = rows.toDF("id", "name")
-      val dir = java.nio.file.Files.createTempDirectory("rt").toString + "/t"
+      val dir = LocalScratch.tempDir("rt") + "/t"
       df.write.parquet(dir)
       val back = s.read.parquet(dir)
       // parquet doesn't preserve not-null; compare names+types only

@@ -17,7 +17,7 @@ class SnapshotLogSpec extends AnyFunSuite {
   val d = TestSpark.sf0001
 
   private def freshTable(): String =
-    java.nio.file.Files.createTempDirectory("graft_snap_spec").toString
+    LocalScratch.tempDir("graft_snap_spec")
 
   /** A tiny committed base snapshot to build on. */
   private def seed(table: String, tag: Int): Long = {
@@ -372,9 +372,7 @@ class SnapshotLogSpec extends AnyFunSuite {
   test("footer-derived fileStats ≡ the scan's, including null keys, " +
       "all-null files, and non-integral fallbacks (the r15 zero-job stats)") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.LocalScratch.scratchDir), "footer_stats")
-      .toString
+    val base = LocalScratch.tempDir("footer_stats")
     // long key with nulls and negatives, several files
     s.range(1000).select(
         when(col("id") % 97 === 0, lit(null)).otherwise(col("id") - 500L)
@@ -425,9 +423,7 @@ class SnapshotLogSpec extends AnyFunSuite {
     // schema to the reader instead of paying the distributed
     // footer-union job — rows, null-fill, and schema must be
     // indistinguishable from the legacy union.
-    val table = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.LocalScratch.scratchDir), "schema_read")
-      .toString
+    val table = LocalScratch.tempDir("schema_read")
     graft.streaming.CdcStream.seedTarget(s, table,
       Tables.orders(s, d).select("o_orderkey", "o_orderstatus",
         "o_totalprice"), "o_orderkey")

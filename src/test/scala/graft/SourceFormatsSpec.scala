@@ -19,7 +19,7 @@ class SourceFormatsSpec extends AnyFunSuite {
 
   test("csv round-trip preserves aggregation results") {
     val events = Tables.events(s, d).drop("ts") // csv has no timestamp fidelity
-    val dir = java.nio.file.Files.createTempDirectory("csv").toString + "/events"
+    val dir = LocalScratch.tempDir("csv") + "/events"
     events.write.option("header", "true").csv(dir)
     val back = s.read.option("header", "true").option("inferSchema", "true").csv(dir)
     assert(agg(back) === agg(events))
@@ -27,7 +27,7 @@ class SourceFormatsSpec extends AnyFunSuite {
 
   test("json round-trip preserves aggregation results") {
     val events = Tables.events(s, d)
-    val dir = java.nio.file.Files.createTempDirectory("json").toString + "/events"
+    val dir = LocalScratch.tempDir("json") + "/events"
     events.write.json(dir)
     val back = s.read.json(dir)
     assert(agg(back) === agg(events))

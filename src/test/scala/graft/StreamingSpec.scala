@@ -116,7 +116,7 @@ class StreamingSpec extends AnyFunSuite {
     * (max on-time ts − 2 h). Returns the feed dir. */
   private def writeLateFeed(): String = {
     val events = Tables.events(s, d)
-    val dir = java.nio.file.Files.createTempDirectory("graft_late_feed").toString
+    val dir = LocalScratch.tempDir("graft_late_feed")
     landBatch(dir, EventStreams.lateMain(events), "0_main", 1000000L)
     landBatch(dir, EventStreams.lateNudge(events), "1_nudge", 2000000L)
     landBatch(dir, EventStreams.lateArrivals(events), "2_late", 3000000L)
@@ -186,7 +186,7 @@ class StreamingSpec extends AnyFunSuite {
     // only evicted state without late-filtering would RE-EMIT the
     // evicted-key duplicates — both failure modes break the count.
     val events = Tables.events(s, d)
-    val dir = java.nio.file.Files.createTempDirectory("graft_late_dup").toString
+    val dir = LocalScratch.tempDir("graft_late_dup")
     val maxTs = events.agg(max(col("ts"))).head().getTimestamp(0)
     val lateDups = events.filter(
       col("ts") <= lit(maxTs) - expr("INTERVAL 4 HOURS"))
@@ -266,8 +266,8 @@ class StreamingSpec extends AnyFunSuite {
     // SAME query again from that checkpoint: the restarted run must
     // recognize all input as committed and append zero new rows —
     // the recovery contract a 24/7 ingest pipeline leans on.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_ckpt_out").toString
+    val ckpt = LocalScratch.tempDir("graft_ckpt")
+    val out = LocalScratch.tempDir("graft_ckpt_out")
     def run(): Unit = {
       val q = EventStreams.readEventStream(s, d)
         .writeStream.outputMode("append")
@@ -289,7 +289,7 @@ class StreamingSpec extends AnyFunSuite {
     // (/root/reference/src/main.rs:120-151); foreachBatch is that same
     // batched sink contract fed by an unbounded source — here writing
     // parquet in place of the JDBC table, same per-batch semantics.
-    val out = java.nio.file.Files.createTempDirectory("graft_fb").toString
+    val out = LocalScratch.tempDir("graft_fb")
     val stream = EventStreams.readEventStream(s, d)
     val q = stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
@@ -355,7 +355,7 @@ class StreamingSpec extends AnyFunSuite {
     // essentially all of them (same floor as the d12 gate)
     assert(batchFound.size >= (shard.count() * 0.95).toInt, "index recall collapsed")
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_shard_stream").toString
+    val dir = LocalScratch.tempDir("graft_shard_stream")
     shard.repartition(3).write.mode("overwrite").parquet(dir) // ≥2 files → ≥2 batches
     val streamedFound = scala.collection.mutable.Set[(Long, Long)]()
     var batches = 0
@@ -399,7 +399,7 @@ class StreamingSpec extends AnyFunSuite {
       .groupBy("bin").agg(count(lit(1)).as("cnt"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val single = hist(orders)
-    val dir = java.nio.file.Files.createTempDirectory("graft_hist_stream").toString
+    val dir = LocalScratch.tempDir("graft_hist_stream")
     orders.repartition(3).write.mode("overwrite").parquet(dir)
     val merged = scala.collection.mutable.Map[Long, Long]().withDefaultValue(0L)
     var batches = 0
@@ -425,18 +425,18 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Upsert
     import graft.sources.SnapshotLog
     import graft.streaming.CdcStream
-    val table = java.nio.file.Files.createTempDirectory("graft_u04").toString
+    val table = LocalScratch.tempDir("graft_u04")
     CdcStream.seedTarget(s, table, Tables.orders(s, d))
     // ops sharded by key into one file each: key-disjoint shards
     // commute, so ANY micro-batch arrival order must converge to the
     // single-batch apply
-    val opsDir = java.nio.file.Files.createTempDirectory("graft_u04_ops").toString
+    val opsDir = LocalScratch.tempDir("graft_u04_ops")
     val ops = Upsert.cdcOpsLog(s, d)
     (0 until 3).foreach { i =>
       ops.filter(pmod(col("o_orderkey"), lit(3)) === i)
         .coalesce(1).write.mode("append").parquet(opsDir)
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_u04_ckpt").toString
+    val ckpt = LocalScratch.tempDir("graft_u04_ckpt")
     def run(): Unit = {
       val stream = s.readStream.schema(ops.schema)
         .option("maxFilesPerTrigger", 1).parquet(opsDir)
@@ -475,18 +475,18 @@ class StreamingSpec extends AnyFunSuite {
       "zero rewrites; restart commits nothing; compaction converges") {
     import graft.sources.SnapshotLog
     import graft.streaming.CdcStream
-    val table = java.nio.file.Files.createTempDirectory("graft_u09").toString
+    val table = LocalScratch.tempDir("graft_u09")
     CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
     val baseFiles = SnapshotLog.readManifest(s, table, 1L).get.files
     // retraction feed: the %21 doomed keys in 3 key-disjoint files
-    val keysDir = java.nio.file.Files.createTempDirectory("graft_u09_keys").toString
+    val keysDir = LocalScratch.tempDir("graft_u09_keys")
     val doomed = Tables.orders(s, d)
       .filter(col("o_orderkey") % 21 === 0).select("o_orderkey")
     (0 until 3).foreach { i =>
       doomed.filter(col("o_orderkey") % 63 === i * 21)
         .coalesce(1).write.mode("append").parquet(keysDir)
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_u09_ckpt").toString
+    val ckpt = LocalScratch.tempDir("graft_u09_ckpt")
     def run(): Unit = {
       val stream = s.readStream.schema(doomed.schema)
         .option("maxFilesPerTrigger", 1).parquet(keysDir)
@@ -517,7 +517,7 @@ class StreamingSpec extends AnyFunSuite {
   test("CDC apply survives a delete-everything batch (empty table still readable)") {
     import graft.sources.SnapshotLog
     import graft.streaming.CdcStream
-    val table = java.nio.file.Files.createTempDirectory("graft_u04_all").toString
+    val table = LocalScratch.tempDir("graft_u04_all")
     CdcStream.seedTarget(s, table, Tables.orders(s, d))
     val deleteAll = Tables.orders(s, d)
       .withColumn("op", lit("D")).withColumn("ts", lit(1))
@@ -535,7 +535,7 @@ class StreamingSpec extends AnyFunSuite {
   test("CDC apply rewrites only the files containing affected keys") {
     import graft.sources.SnapshotLog
     import graft.streaming.CdcStream
-    val table = java.nio.file.Files.createTempDirectory("graft_u04_files").toString
+    val table = LocalScratch.tempDir("graft_u04_files")
     // seed range-partitioned so files are disjoint key ranges
     val base = s"$table/data/base"
     Tables.orders(s, d).repartitionByRange(4, col("o_orderkey"))
@@ -565,8 +565,8 @@ class StreamingSpec extends AnyFunSuite {
       "identical to the statless full-scan path") {
     import graft.sources.SnapshotLog
     import graft.streaming.CdcStream
-    val tA = java.nio.file.Files.createTempDirectory("graft_cdc_stats").toString
-    val tB = java.nio.file.Files.createTempDirectory("graft_cdc_nostats").toString
+    val tA = LocalScratch.tempDir("graft_cdc_stats")
+    val tB = LocalScratch.tempDir("graft_cdc_nostats")
     // A: seeded WITH the key → range-clustered layout + stats sidecar
     CdcStream.seedTarget(s, tA, Tables.orders(s, d), "o_orderkey")
     // B: statless control over the SAME range-clustered layout
@@ -611,7 +611,7 @@ class StreamingSpec extends AnyFunSuite {
       "snapshot expiry (which also reclaims stats sidecars)") {
     import graft.sources.SnapshotLog
     import graft.streaming.CdcStream
-    val table = java.nio.file.Files.createTempDirectory("graft_cdc_txn").toString
+    val table = LocalScratch.tempDir("graft_cdc_txn")
     CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
     assert(CdcStream.applyBatch(s, table, cdcTouch(0, 1), 0L, "o_orderkey").version === 2L)
     assert(CdcStream.applyBatch(s, table, cdcTouch(1, 2), 1L, "o_orderkey").version === 3L)
@@ -645,7 +645,7 @@ class StreamingSpec extends AnyFunSuite {
   test("crash-window heal: commit landed but the txn sidecar write was lost") {
     import graft.sources.SnapshotLog
     import graft.streaming.CdcStream
-    val table = java.nio.file.Files.createTempDirectory("graft_cdc_heal").toString
+    val table = LocalScratch.tempDir("graft_cdc_heal")
     CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
     assert(CdcStream.applyBatch(s, table, cdcTouch(0, 1), 0L, "o_orderkey").version === 2L)
     assert(CdcStream.applyBatch(s, table, cdcTouch(1, 2), 1L, "o_orderkey").version === 3L)
@@ -679,7 +679,7 @@ class StreamingSpec extends AnyFunSuite {
     // file) is now unrepresentable twice over: stats ride the atomic
     // manifest (a torn manifest is an invisible VERSION, not bad
     // stats), and commit() rejects an inverted range loudly
-    val table = java.nio.file.Files.createTempDirectory("graft_cdc_torn").toString
+    val table = LocalScratch.tempDir("graft_cdc_torn")
     CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
     intercept[IllegalArgumentException] {
       SnapshotLog.commit(s, table, "bad-stats",
@@ -713,7 +713,7 @@ class StreamingSpec extends AnyFunSuite {
   test("CDC batch with null keys applies cleanly and keeps pruning") {
     import graft.sources.SnapshotLog
     import graft.streaming.CdcStream
-    val table = java.nio.file.Files.createTempDirectory("graft_cdc_null").toString
+    val table = LocalScratch.tempDir("graft_cdc_null")
     CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
     val updates = Tables.orders(s, d).orderBy("o_orderkey").limit(2)
       .withColumn("op", lit("U")).withColumn("ts", lit(1))
@@ -741,7 +741,7 @@ class StreamingSpec extends AnyFunSuite {
       "namespacing, no resurrection, batch supersedes pending deletes") {
     import graft.sources.SnapshotLog
     import graft.streaming.CdcStream
-    val table = java.nio.file.Files.createTempDirectory("graft_cdc_ilv").toString
+    val table = LocalScratch.tempDir("graft_cdc_ilv")
     CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
     val orders = Tables.orders(s, d)
     val doomed = orders.filter(col("o_orderkey") % 21 === 0)
@@ -804,7 +804,7 @@ class StreamingSpec extends AnyFunSuite {
       "batches and a later evolve batch lacking the column") {
     import graft.sources.SnapshotLog
     import graft.streaming.CdcStream
-    val table = java.nio.file.Files.createTempDirectory("graft_cdc_sch").toString
+    val table = LocalScratch.tempDir("graft_cdc_sch")
     CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
     val orders = Tables.orders(s, d)
     // batch 0 widens: %23 keys gain o_channel
@@ -848,7 +848,7 @@ class StreamingSpec extends AnyFunSuite {
       "no-op, distinct appIds keep streams independent") {
     import graft.sources.SnapshotLog
     import graft.streaming.CdcStream
-    val table = java.nio.file.Files.createTempDirectory("graft_cdc_upd").toString
+    val table = LocalScratch.tempDir("graft_cdc_upd")
     CdcStream.seedTarget(s, table, Tables.orders(s, d), "o_orderkey")
     val baseFiles = SnapshotLog.readManifest(s, table, 1L).get.files
     val rows = Tables.orders(s, d).filter(col("o_orderkey") % 29 === 0)
