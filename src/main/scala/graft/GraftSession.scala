@@ -10,9 +10,8 @@ import org.apache.spark.sql.SparkSession
   * The only parameter is the worker-thread count. Settings the profile
   * leaves unset (`spark.eventLog.*`, the `spark.graft.lsh.*` geometry
   * overrides) stay reachable as `-Dspark.*` JVM properties, which
-  * `SparkConf` loads and Bench passes on to its child JVMs. The AQE
-  * settings are runtime SQL confs, so an A/B run can flip them with
-  * `spark.conf.set`.
+  * `SparkConf` loads. The AQE settings are runtime SQL confs, so an
+  * A/B run can flip them with `spark.conf.set`.
   */
 object GraftSession {
 

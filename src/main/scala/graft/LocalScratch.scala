@@ -42,8 +42,8 @@ object LocalScratch {
     * local fixtures whose WRITE time the bench measures inline, and the
     * sandbox device's intermittent write-throttle inflated exactly
     * these queries 26–29× (round 7; in git history). /dev/shm
-    * persists across the bench's child JVMs, so the once-per-sfDir
-    * fixture caching keyed on source size+mtime keeps working.
+    * persists across JVMs, so the once-per-sfDir fixture caching keyed
+    * on source size+mtime also holds from one run to the next.
     * `SPARK_GRAFT_SCRATCH` overrides for an explicit location (e.g. a
     * cluster's fast scratch mount). */
   def scratchDir: String = sys.env.get("SPARK_GRAFT_SCRATCH").getOrElse {

@@ -31,6 +31,13 @@ object SparkEntry {
       graft.sources.SourceFormats.queries ++ graft.sources.LakeMaintenance.queries ++
       graft.sources.SnapshotLog.queries
 
+  /** The names among `names` that [[queries]] does not register, so a
+    * main can reject a typo before it builds a session. */
+  def unknownQueries(names: Seq[String]): Seq[String] = {
+    val known = queries
+    names.filterNot(known.contains).distinct
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops
     * (d02 minhash-LSH, d03 simhash, s02 ann-lsh → rows-only check +

@@ -6,12 +6,15 @@ import java.nio.file.{Files, Paths}
   * every failed query with its exception class and exits non-zero. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir, rest @ _*) = args
-    val only: Set[String] = rest.toSet // optional subset for dev iteration
+    val Array(sfDir, outDir, only @ _*) = args // optional subset for dev iteration
+    val unknown = SparkEntry.unknownQueries(only)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(1)
+    }
+    val attempted = if (only.isEmpty) SparkEntry.queries.keys.toSeq else only.distinct
     val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    val attempted = SparkEntry.queries.keys.toSeq
-      .filter(name => only.isEmpty || only(name))
     val failed = attempted.flatMap { name =>
       try {
         SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")

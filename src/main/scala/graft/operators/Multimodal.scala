@@ -322,8 +322,7 @@ object Multimodal {
     // O(payload bytes) — the same asymptotic cost ANY rolling chunker
     // pays — parallel across and within payloads (positions explode,
     // the m06 class); spans are per-doc-bounded windows; the rollup
-    // is one hash aggregate on digests. Explode-heavy → Bench
-    // soloist at birth (the d04/t06 rule).
+    // is one hash aggregate on digests.
     "m08_cdc_chunking" -> ((s, d) =>
       cdcChunks(s, d).groupBy("source").agg(
           countDistinct(col("doc_id")).as("n_docs"),

@@ -23,9 +23,11 @@ import graft.Checkpoint.TruncateOps
   *     100 TB path: band join ≈ O(n · bucket_occupancy), all shuffle-
   *     friendly.
   *
-  * Vector math is built-in higher-order functions (zip_with/aggregate)
-  * — codegen'd, no UDF, no shuffle. Elements are cast float→double
-  * (exact) before arithmetic so results are engine-portable.
+  * Cosine similarity is the native codegen'd `CosineSimilarity` kernel
+  * (one pass over both arrays, no UDF, no shuffle); `dot`/`norm` keep
+  * the higher-order-function form it is checked against. Elements are
+  * cast float→double (exact) before arithmetic so results are
+  * engine-portable.
   */
 object Similarity {
 
@@ -74,8 +76,7 @@ object Similarity {
     * job, memoized per plan per session), so a 100 TB run scales its
     * bucket space without anyone remembering a knob. The confs
     * OVERRIDE the heuristic for deployments that have tuned geometry
-    * (set them as `-Dspark.graft.lsh.*` JVM properties; Bench passes
-    * its JVM arguments on to its child JVMs). */
+    * (set them as `-Dspark.graft.lsh.*` JVM properties). */
   val PlanesConf = "spark.graft.lsh.planes"
   val BandsConf = "spark.graft.lsh.bands"
 
@@ -1014,8 +1015,7 @@ object Similarity {
     // |probes × ≤40|-row full-outer join, and the final top-5 is the
     // same heap — after the corpus passes (the BM25 stats aggregate
     // and scoring projection, the vector scan), NOTHING is
-    // corpus-sized. Fuses c15+s01-class work in one query →
-    // Bench.Soloists at birth (the d16 composite rule).
+    // corpus-sized. Fuses c15+s01-class work in one query.
     "s18_hybrid_rrf" -> ((s, d) => hybridRrf(s, d, Corpus.bm25Candidates(s, d))),
 
     // s19: VALUE-LEVEL SIGN-LSH ORACLE TWIN (the d18/d19 convention,

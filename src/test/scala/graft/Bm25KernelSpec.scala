@@ -93,12 +93,16 @@ class Bm25KernelSpec extends AnyFunSuite {
 
   test("interpreted evaluation gives the same candidates as generated code") {
     val docs = edgeDocs
-    val generated = triples(kernelCandidates(docs))
-    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try assert(triples(kernelCandidates(docs)) === generated)
-    finally confs.foreach { case (k, _) => s.conf.unset(k) }
+    def withConfs[T](confs: (String, String)*)(body: => T): T = {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      try body finally confs.foreach { case (k, _) => s.conf.unset(k) }
+    }
+    // no silent fallback to interpretation if the generated code fails to compile
+    val generated = withConfs("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(triples(kernelCandidates(docs)))
+    val interpreted = withConfs("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(triples(kernelCandidates(docs)))
+    assert(interpreted === generated)
   }
 
   /** a07 as the Window / broadcast-NLJ plan it replaced. */

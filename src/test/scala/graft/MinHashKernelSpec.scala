@@ -105,15 +105,17 @@ class MinHashKernelSpec extends AnyFunSuite {
   private def recallVerdict(df: DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
+  /** From an RDD, so the signature projection is not folded into a local
+    * relation and really runs as generated code. */
   private def edgeDocs: DataFrame = {
     import s.implicits._
     val long = "the quick brown fox jumps over the lazy dog and then the quick brown fox sleeps"
-    Seq[(Long, String)](
+    s.sparkContext.parallelize(Seq[(Long, String)](
       (1L, null), (2L, ""), (3L, " "), (4L, "one"), (5L, "Two Words"),
       (6L, "  leading whitespace then words"), (7L, "trailing whitespace after words \t "),
       (8L, "repeated \t  whitespace\n\nbetween   the   tokens"),
       (9L, "Ünïcödé 日本語 テキスト ñandú ÇA va"), (10L, "日本語 テキスト"),
-      (11L, "a b c"), (12L, long), (13L, long.split(" ").init.mkString(" ")))
+      (11L, "a b c"), (12L, long), (13L, long.split(" ").init.mkString(" "))), 1)
       .toDF("doc_id", "text").withColumn("source", lit("t"))
   }
 
@@ -127,12 +129,16 @@ class MinHashKernelSpec extends AnyFunSuite {
 
   test("interpreted evaluation gives the same signatures as generated code") {
     val docs = edgeDocs
-    val generated = sigMap(Dedup.minhashSignatures(docs))
-    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try assert(sigMap(Dedup.minhashSignatures(docs)) === generated)
-    finally confs.foreach { case (k, _) => s.conf.unset(k) }
+    def withConfs[T](confs: (String, String)*)(body: => T): T = {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      try body finally confs.foreach { case (k, _) => s.conf.unset(k) }
+    }
+    // no silent fallback to interpretation if the generated code fails to compile
+    val generated = withConfs("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(sigMap(Dedup.minhashSignatures(docs)))
+    val interpreted = withConfs("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(sigMap(Dedup.minhashSignatures(docs)))
+    assert(interpreted === generated)
   }
 
   test("overlap equals the 32-term CASE sum, null slots included") {

@@ -43,12 +43,6 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     assert(!s.contains("graft_bin"), s"q20 has an equi key; rule must not fire:\n$s")
   }
 
-  test("cosine_sim resolves from SQL text via the injected registry entry") {
-    val r = spark.sql(
-      "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c").head().getDouble(0)
-    assert(math.abs(r - 1.0) < 1e-12)
-  }
-
   test("numeric (non-timestamp) ranges rewrite and stay exact") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
